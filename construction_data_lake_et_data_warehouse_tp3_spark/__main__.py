@@ -342,7 +342,9 @@ def cmd_ann(args) -> int:
         if not args.stream_store:
             print("error: ann publish requires --stream-store", file=sys.stderr)
             return 2
-        postings = spark.read.parquet(os.path.join(args.stream_store, "vectors"))
+        from .warehouse.merge import ParquetTable
+
+        postings = ParquetTable(spark, os.path.join(args.stream_store, "vectors")).read()
         print(json.dumps(idx.publish_postings(postings)))
         return 0
     qcol = "query_id" if "query_id" in df.columns else "vec_id"

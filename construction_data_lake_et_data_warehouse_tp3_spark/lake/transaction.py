@@ -1,9 +1,14 @@
-"""Multi-table atomic transactions over the parquet lake — the cross-table
-upgrade of the per-feed commit log (lake/writer.py `_commit_log`): a sync
-that lands dim_users AND its fact tables must expose either ALL of the new
-state or NONE of it, which per-table version commits cannot guarantee
-(the reference's MySQL warehouse gets this from InnoDB transactions,
-sync_to_mysql.py:117-142; the lake needs its own).
+"""Atomic transactions over the parquet lake — the commit protocol for
+every table the engine rewrites whole: a sync that lands dim_users AND
+its fact tables must expose either ALL of the new state or NONE of it,
+which per-table version commits cannot guarantee (the reference's MySQL
+warehouse gets this from InnoDB transactions, sync_to_mysql.py:117-142;
+the lake needs its own). The same log also commits single-table writes:
+each warehouse `ParquetTable` (warehouse/merge.py) — and so every
+warehouse MERGE and every streaming state store built on one — is the
+one table of its own Lakehouse. Only the versioned feeds keep their own
+`_commit_log` (lake/writer.py), because a feed version's number is in
+its `version=vN` directory name before the write starts.
 
 Design (Delta/Iceberg-shaped, filesystem-atomic primitives only):
 
@@ -36,6 +41,8 @@ import uuid
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.observation import Observation
 
 
 class TxnConflictError(RuntimeError):
@@ -66,9 +73,13 @@ class LakeTransaction:
         self._seq += 1
         rel = os.path.join("tables", table, f"_txn_{self.txn_id}_{self._seq}")
         dest = os.path.join(self.lakehouse.root, rel)
-        df.write.mode("overwrite").parquet(dest)
+        # the row count rides the write job: no second job reads it back
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("records")).write.mode(
+            "overwrite"
+        ).parquet(dest)
         self.staged[table] = rel
-        self.records[table] = self.lakehouse.spark.read.parquet(dest).count()
+        self.records[table] = obs.get["records"]
 
     def read_staged(self, table: str) -> DataFrame:
         """This transaction's current view of `table`: its own staged
@@ -350,8 +361,6 @@ class Lakehouse:
         for update detection — the downstream-sync primitive ("what
         changed since the snapshot I last exported?") the reference's
         full-table MySQL re-sync (sync_to_mysql.py:117) lacks."""
-        from pyspark.sql import functions as F
-
         def _resolve_or_none(snapshot: int) -> str | None:
             try:
                 return os.path.normpath(self._resolve(table, snapshot))

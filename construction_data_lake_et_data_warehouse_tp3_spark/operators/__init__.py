@@ -64,58 +64,8 @@ _MODULES = (
 # green row is >4 rounds older than the newest committed CORRECTNESS
 # file, if a registry query has no committed row and no head-of-line
 # priority slot, or if the registry outgrows rotation capacity.
-# [generated] tools/rotate_priority.py from CORRECTNESS r01..r11
+# [generated] tools/rotate_priority.py from CORRECTNESS r01..r13
 _DRIVER_PRIORITY = (
-    "asof_latest_order",
-    "daily_event_stats",
-    "decontaminate",
-    "dedup_exact",
-    "domain_mix",
-    "dq_audit_orders",
-    "edit_distance_pairs",
-    "event_sessions",
-    "hopping_window_events",
-    "ivf_kmeans_topk",
-    "kmeans_embeddings",
-    "lm_surprisal",
-    "minhash_lsh_candidates",
-    "mixture_resample",
-    "pack_sequences",
-    "pagerank_products",
-    "pii_scrub",
-    "quality_filters",
-    "ranking_windows_showcase",
-    "repetition_stats",
-    "resample_daily_revenue",
-    "scalar_datetime_ops",
-    "session_window_stats",
-    "substring_dup_pairs",
-    "time_bucket_rollup",
-    "token_count",
-    "top_event_per_user",
-    "top_orders_limit",
-    "tpch_q1",
-    "tpch_q10",
-    "tpch_q12",
-    "tpch_q13",
-    "tpch_q14",
-    "tpch_q15",
-    "tpch_q17",
-    "tpch_q18",
-    "tpch_q19",
-    "tpch_q21",
-    "tpch_q22",
-    "tpch_q3",
-    "tpch_q4",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q7",
-    "tpch_q8",
-    "tpch_q9",
-    "union_transactions",
-    "user_transaction_summary",
-    "user_transaction_summary_eur",
-    "word_freq_topk",
     "ab_test_zscore",
     "arrow_doc_stats",
     "benford_first_digit",
@@ -266,6 +216,56 @@ _DRIVER_PRIORITY = (
     "string_functions_showcase",
     "text_quality",
     "tfidf_top_terms",
+    "asof_latest_order",
+    "daily_event_stats",
+    "decontaminate",
+    "dedup_exact",
+    "domain_mix",
+    "dq_audit_orders",
+    "edit_distance_pairs",
+    "event_sessions",
+    "hopping_window_events",
+    "ivf_kmeans_topk",
+    "kmeans_embeddings",
+    "lm_surprisal",
+    "minhash_lsh_candidates",
+    "mixture_resample",
+    "pack_sequences",
+    "pagerank_products",
+    "pii_scrub",
+    "quality_filters",
+    "ranking_windows_showcase",
+    "repetition_stats",
+    "resample_daily_revenue",
+    "scalar_datetime_ops",
+    "session_window_stats",
+    "substring_dup_pairs",
+    "time_bucket_rollup",
+    "token_count",
+    "top_event_per_user",
+    "top_orders_limit",
+    "tpch_q1",
+    "tpch_q10",
+    "tpch_q12",
+    "tpch_q13",
+    "tpch_q14",
+    "tpch_q15",
+    "tpch_q17",
+    "tpch_q18",
+    "tpch_q19",
+    "tpch_q21",
+    "tpch_q22",
+    "tpch_q3",
+    "tpch_q4",
+    "tpch_q5",
+    "tpch_q6",
+    "tpch_q7",
+    "tpch_q8",
+    "tpch_q9",
+    "union_transactions",
+    "user_transaction_summary",
+    "user_transaction_summary_eur",
+    "word_freq_topk",
 )
 
 

@@ -92,6 +92,8 @@ def pagerank_products(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.select(F.col("src").alias("pid")).distinct().localCheckpoint(eager=True)
     )
     n = nodes.count()
+    if n == 0:  # no co-purchases (empty or single-row input): no ranks
+        return _top_ranks(nodes.select("pid", F.lit(0).cast("bigint").alias("r_int")))
     r0 = int(SCALE / n)
     base = int((100 - DAMP_NUM) * r0 / DAMP_DEN)
     ranks = nodes.select("pid", F.lit(r0).cast("bigint").alias("r_int"))
@@ -113,6 +115,11 @@ def pagerank_products(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
+    return _top_ranks(ranks)
+
+
+def _top_ranks(ranks: DataFrame) -> DataFrame:
+    """The TOP_K (pid, r_int) rows as (part_id, display rank)."""
     return (
         ranks.orderBy(F.desc("r_int"), F.asc("pid"))
         .limit(TOP_K)

@@ -83,10 +83,12 @@ def daily_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return daily.withColumn("running_events", F.sum("n_events").over(w))
 
 
-def event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionization: gap > 30 min starts a new session (lag + cumulative
-    sum of session-start flags), then per-user session stats."""
-    events = load_table(spark, sf_dir, "events")
+def _sessionize(events: DataFrame) -> DataFrame:
+    """Events with a per-user `session_id`: a gap over SESSION_GAP_MINUTES
+    after the user's previous event (lag + cumulative sum of session-start
+    flags) starts a new session. Gaps are compared in microseconds, as the
+    oracle's epoch() difference keeps the fraction: whole seconds would
+    merge a 1800.5 s gap into one session."""
     # an event with a NULL user or timestamp cannot be sessionized /
     # sequenced: Spark orders NULL keys FIRST and DuckDB LAST, so such
     # rows silently produce different sessions per engine (dirty-input
@@ -95,16 +97,21 @@ def event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
     by_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    micros = F.unix_micros(F.col("ts").cast("timestamp"))
+    prev = F.lag(micros, 1).over(by_user)
     flagged = events.withColumn(
         "new_session",
         F.when(
-            F.col("ts").cast("timestamp").cast("long")
-            - F.lag(F.col("ts").cast("timestamp").cast("long"), 1, 0).over(by_user)
-            > SESSION_GAP_MINUTES * 60,
-            1,
-        ).otherwise(F.when(F.lag("ts", 1).over(by_user).isNull(), 1).otherwise(0)),
+            prev.isNull() | (micros - prev > SESSION_GAP_MINUTES * 60 * 1_000_000), 1
+        ).otherwise(0),
     )
-    sessions = flagged.withColumn("session_id", F.sum("new_session").over(by_user))
+    return flagged.withColumn("session_id", F.sum("new_session").over(by_user))
+
+
+def event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sessionization: gap > 30 min starts a new session (lag + cumulative
+    sum of session-start flags), then per-user session stats."""
+    sessions = _sessionize(load_table(spark, sf_dir, "events"))
     return (
         sessions.groupBy("user_id", "session_id")
         .agg(
@@ -134,25 +141,7 @@ def session_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join; the final entry-type rollup is |event types| rows.
     The oracle derives the entry independently via a row_number()=1
     pick, so the struct-min trick is cross-checked each round."""
-    events = load_table(spark, sf_dir, "events")
-    # an event with a NULL user or timestamp cannot be sessionized /
-    # sequenced: Spark orders NULL keys FIRST and DuckDB LAST, so such
-    # rows silently produce different sessions per engine (dirty-input
-    # parity sweep) - excluded identically on BOTH engines
-    events = events.where(
-        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-    )
-    by_user = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = events.withColumn(
-        "new_session",
-        F.when(
-            F.col("ts").cast("timestamp").cast("long")
-            - F.lag(F.col("ts").cast("timestamp").cast("long"), 1, 0).over(by_user)
-            > SESSION_GAP_MINUTES * 60,
-            1,
-        ).otherwise(F.when(F.lag("ts", 1).over(by_user).isNull(), 1).otherwise(0)),
-    )
-    sessions = flagged.withColumn("session_id", F.sum("new_session").over(by_user))
+    sessions = _sessionize(load_table(spark, sf_dir, "events"))
     per_session = sessions.groupBy("user_id", "session_id").agg(
         F.count("*").alias("n_events"),
         F.min(F.struct("ts", "event_id", "event_type"))

@@ -77,8 +77,9 @@ class StreamingCurator:
             .where(F.col("owner_id").isNull() | (F.col("owner_id") == F.col("doc_id")))
             .drop("owner_id")
             # sever the lineage from the store's parquet files BEFORE the
-            # MERGE below swaps/deletes them (overwrite-swap commit) — a
-            # lazy plan would re-list vanished files at the second merge
+            # MERGE below deletes them (each commit vacuums the state it
+            # replaced) — a lazy plan would re-list vanished files at the
+            # second merge
             .localCheckpoint(eager=True)
         )
         merge_into(

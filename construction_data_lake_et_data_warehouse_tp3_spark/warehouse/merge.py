@@ -9,7 +9,10 @@ Here a MERGE is one distributed job:
     kept   = target LEFT ANTI updates ON keys     (rows not being updated)
     result = kept UNION updates                   (updated + inserted rows)
 
-written with an atomic directory swap (write tmp → rename). Matched rows
+committed as the table's next snapshot through the lake's transaction
+log (lake/transaction.py): the new state is staged in a fresh directory
+and published by one manifest rename, so a crash at any step leaves
+either the old or the new state readable, never neither. Matched rows
 are replaced wholesale, exactly like the reference's ON-DUPLICATE column
 lists which update every non-key column (+ updated_at).
 
@@ -17,9 +20,9 @@ Scale notes:
 - The anti-join shuffles on the merge keys only; with a small updates
   side Spark broadcasts it and the target scan never shuffles.
 - Rewrite cost is O(target) per merge — the plain-parquet trade-off. At
-  100 TB you partition the target (e.g. by snapshot_date) so the swap
-  touches only affected partitions, or swap the storage layer for a
-  Delta/Iceberg table where MERGE rewrites matched files only; the
+  100 TB you partition the target (e.g. by snapshot_date) so a commit
+  rewrites only affected partitions, or list data files in the manifest
+  so MERGE rewrites matched files only (the Delta Lake design); the
   call-site API here stays the same.
 - Exactly-once: merge is idempotent on keys — re-running the same batch
   yields the same table state (asserted in tests; upgrade over the
@@ -28,41 +31,47 @@ Scale notes:
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..lake.transaction import Lakehouse
+
+#: a ParquetTable's name inside its own Lakehouse
+_TABLE = "data"
+
 
 class ParquetTable:
-    """A parquet-backed managed table with overwrite-swap commits."""
+    """A parquet-backed managed table: the single table of a `Lakehouse`
+    rooted at `path`, so every overwrite is one transaction-log commit."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
-        self.path = path
+        self.lakehouse = Lakehouse(spark, path)
+
+    @property
+    def path(self) -> str:
+        """The committed directory the latest snapshot resolves to: plain
+        parquet that any reader can scan without the log. KeyError if the
+        table has never been written."""
+        return self.lakehouse.tables()[_TABLE]
 
     def exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            name.endswith(".parquet") for name in os.listdir(self.path)
-        )
+        return _TABLE in self.lakehouse.tables()
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        return self.lakehouse.read(_TABLE)
 
     def overwrite(self, df: DataFrame) -> None:
-        """Commit df as the new table state via tmp-dir + atomic rename."""
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(tmp)
-        old = f"{self.path}__old_{uuid.uuid4().hex[:8]}"
-        if os.path.isdir(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
+        """Commit df as the table's next snapshot, then delete the state
+        it replaced (staging of crashed writers is kept for vacuum's
+        default crash window)."""
+        txn = self.lakehouse.begin()
+        txn.write(_TABLE, df)
+        txn.commit()
+        self.lakehouse.vacuum(keep_snapshots=1)
 
 
 def dedupe_updates(

@@ -144,8 +144,12 @@ def dirty_dir(spark, tmp_path_factory):
     # 990005 (r8 wave 4): a NaN value — before the money helpers mapped
     # NaN to NULL, CAST(round(NaN*100) AS BIGINT) ABORTED 16 queries'
     # jobs under ANSI (and DuckDB's cast raised the same way);
-    # 990006-990007: epoch-adjacent and far-future timestamps
+    # 990006-990007: epoch-adjacent and far-future timestamps;
+    # 990008-990009: a fresh user's two events 1800.5 s apart — a new
+    # session under the 30-minute gap only if the fraction is kept
     import datetime as _dt
+
+    gap_t0 = _dt.datetime(2024, 3, 1, 12, 0, 0)
 
     dirty_ev = spark.createDataFrame(
         [
@@ -156,6 +160,8 @@ def dirty_dir(spark, tmp_path_factory):
             (990005, first_ev.ts, first_ev.user_id, "view", float("nan"), "{}"),
             (990006, _dt.datetime(1970, 1, 1, 0, 0, 1), first_ev.user_id, "view", 2.0, "{}"),
             (990007, _dt.datetime(2200, 12, 31, 23, 59, 59), first_ev.user_id, "purchase", 3.0, "{}"),
+            (990008, gap_t0, 990001, "view", 1.0, "{}"),
+            (990009, gap_t0 + _dt.timedelta(seconds=1800.5), 990001, "click", 1.0, "{}"),
         ],
         ev.schema,
     )

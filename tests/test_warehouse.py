@@ -5,11 +5,15 @@ permissions grant/expiry."""
 
 from __future__ import annotations
 
+import glob
+import os
 from datetime import date, timedelta
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from construction_data_lake_et_data_warehouse_tp3_spark.lake import transaction
 from construction_data_lake_et_data_warehouse_tp3_spark.lake.permissions import (
     PermissionError_,
     PermissionsManager,
@@ -21,6 +25,7 @@ from construction_data_lake_et_data_warehouse_tp3_spark.warehouse import (
     sync_warehouse,
 )
 from construction_data_lake_et_data_warehouse_tp3_spark.warehouse.star import (
+    Warehouse,
     check_fk_misses,
 )
 
@@ -82,6 +87,121 @@ class TestMerge:
         merge_into(table, b2, ["user_id", "tt"])
         rows = {(r["user_id"], r["tt"]): r["amt"] for r in table.read().collect()}
         assert rows == {(1, "O"): 50.0, (1, "F"): 6.0}
+
+
+
+OLD = [(1, "a"), (2, "b")]
+NEW = [(2, "B"), (3, "c")]
+LATER = [(4, "d")]
+
+
+class Crash(Exception):
+    """Stands in for the process dying at the patched step."""
+
+
+def _crash(*args, **kwargs):
+    raise Crash
+
+
+def _overwrite(spark, table, rows):
+    table.overwrite(spark.createDataFrame(rows, "id long, v string"))
+
+
+def _rows(table):
+    return sorted((r.id, r.v) for r in table.read().collect())
+
+
+def _staged(table):
+    return sorted(glob.glob(os.path.join(table.lakehouse.root, "tables", "*", "_txn_*")))
+
+
+class TestCrashSafety:
+    """A crash at any step of ParquetTable.overwrite leaves the table
+    readable: the previous rows until the manifest rename, the new rows
+    after it. Each step is stopped by patching it to raise. The commit
+    path has no cleanup handler, so the files left behind are those a
+    killed process leaves."""
+
+    @pytest.mark.parametrize(
+        "step, target, visible",
+        [
+            ("after the staged write", (transaction.LakeTransaction, "commit"), OLD),
+            ("after the .claim", (transaction.os, "rename"), OLD),
+            ("after the manifest rename", (transaction.Lakehouse, "vacuum"), NEW),
+        ],
+    )
+    def test_stop_after_each_commit_step(
+        self, spark, tmp_path, monkeypatch, step, target, visible
+    ):
+        table = ParquetTable(spark, str(tmp_path / "t"))
+        _overwrite(spark, table, OLD)
+        with monkeypatch.context() as patch:
+            patch.setattr(*target, _crash)
+            with pytest.raises(Crash):
+                _overwrite(spark, table, NEW)
+        assert _rows(table) == sorted(visible), step
+        # a later commit and a vacuum past the crash window both succeed,
+        # and the vacuum leaves only the committed state on disk
+        _overwrite(spark, table, LATER)
+        table.lakehouse.vacuum(min_txn_age_seconds=0)
+        assert _rows(table) == LATER
+        assert _staged(table) == [table.path]
+
+    def test_crash_at_every_rename_leaves_table_readable(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Kill overwrite at its k-th os.rename, for every k it reaches.
+        A rename swap (live directory out, new directory in) leaves the
+        table missing at k=2."""
+        real_rename = os.rename
+        k, crashed = 0, True
+        while crashed:
+            k += 1
+            table = ParquetTable(spark, str(tmp_path / f"t{k}"))
+            _overwrite(spark, table, OLD)
+            calls = 0
+
+            def rename(src, dst):
+                nonlocal calls
+                calls += 1
+                if calls == k:
+                    raise Crash
+                real_rename(src, dst)
+
+            with monkeypatch.context() as patch:
+                patch.setattr(os, "rename", rename)
+                try:
+                    _overwrite(spark, table, NEW)
+                    crashed = False
+                except Crash:
+                    pass
+            assert _rows(table) in (sorted(OLD), sorted(NEW)), f"crash at rename {k}"
+
+
+class TestPathContract:
+    """`path` names the committed directory: plain parquet that pyarrow
+    reads without the log (pyarrow skips `_`-prefixed directories, so the
+    Lakehouse root itself would read as empty)."""
+
+    @pytest.mark.parametrize("standalone", [True, False])
+    def test_pyarrow_reads_what_read_returns(self, spark, tmp_path, standalone):
+        table = (
+            ParquetTable(spark, str(tmp_path / "t"))
+            if standalone
+            else Warehouse(spark, str(tmp_path / "wh")).table("dim_payment_methods")
+        )
+        for batch in (OLD, NEW, LATER):
+            merge_into(
+                table,
+                spark.createDataFrame(batch, "payment_method_id long, v string"),
+                ["payment_method_id"],
+            )
+        arrow = pq.read_table(table.path, columns=["payment_method_id", "v"])
+        got = sorted(zip(*(arrow.column(c).to_pylist() for c in arrow.column_names)))
+        want = sorted(
+            (r.payment_method_id, r.v) for r in table.read().collect()
+        )
+        assert got == want == [(1, "a"), (2, "B"), (3, "c"), (4, "d")]
 
 
 class TestStarSync:
