@@ -89,22 +89,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if _scan_row_groups(f"{sf_dir}/{name}.parquet") < (
             para := spark.sparkContext.defaultParallelism
         ):
-            # HOW to spread differs by row shape (r13, guide §2.5):
-            # embeddings rows are fat (hundreds of doubles, ~6 KB), and a
-            # keyless repartition first pays sortBeforeRepartition over
-            # exactly those bytes (kept on for retry determinism,
-            # SPARK-38388) — hash-distributing on the unique vec_id is
-            # deterministic WITHOUT the sort and measured −8…−12% on the
-            # heavy embedding consumers (kmeans/ivf/bucketed-dup A/B,
-            # min-of-5 interleaved). documents keep ROUND-ROBIN: their
-            # rows are small so the sort is cheap, and the shingle/
-            # minhash folds are compute-bound per row — round robin's
-            # perfectly even row counts beat a hash spread's ±8% strag-
-            # glers (measured: key-mode minhash_lsh_candidates +4.8%).
-            if name == "embeddings":
-                df = df.repartition(para, "vec_id")
-            else:
-                df = df.repartition(para)
+            df = df.repartition(para)
     return df
 
 
