@@ -94,13 +94,11 @@ HEADLINE = (
     "lm_surprisal",
     "edit_distance_pairs",
     "substring_dup_pairs",
-    "pack_sequences",
     "kmeans_embeddings",
     "training_manifest",
-    # r5 additions: exact set-similarity join, chunking, bigram LM,
+    # r5 additions: exact set-similarity join, bigram LM,
     # real audio/video decode kernels, interpolation gap fill
     "ppjoin_jaccard_pairs",
-    "chunk_documents",
     "bigram_surprisal",
     "wav_audio_stats",
     "y4m_video_stats",
@@ -113,7 +111,6 @@ HEADLINE = (
     "scd2_user_state_history",
     "event_transition_matrix",
     "label_centroids",
-    "leakage_safe_split",
     "cms_heavy_hitters",
     "dup_rate_by_source",
     "quantize_embeddings",
@@ -124,7 +121,6 @@ HEADLINE = (
     "ewma_daily_revenue",
     "last_touch_attribution",
     "inverted_index",
-    "weighted_sample_topk",
     "y4m_keyframe_sample",
     "pareto_front_customers",
     # r5d additions: BM25 ranking, directional containment dedup,
@@ -220,10 +216,6 @@ WEDGE_QUERIES = ("link_prediction_jaccard",)
 #: stays a tracked number, not a guess — their at-scale story is the
 #: decade-tier artifact (SCALE_r{N}.json / SCALING.md).
 def _deployment_forms():
-    from construction_data_lake_et_data_warehouse_tp3_spark.operators.curation import (
-        dup_clusters_fast,
-        leakage_safe_split_fast,
-    )
     from construction_data_lake_et_data_warehouse_tp3_spark.operators.dedup import (
         edit_distance_pairs_capped,
         jaccard_dup_pairs,
@@ -234,8 +226,6 @@ def _deployment_forms():
         "jaccard_dup_pairs_router": jaccard_dup_pairs,
         "edit_distance_pairs_capped": edit_distance_pairs_capped,
         "minhash_lsh_candidates_fast": minhash_lsh_candidates_fast,
-        "dup_clusters_fast": dup_clusters_fast,
-        "leakage_safe_split_fast": leakage_safe_split_fast,
     }
 
 

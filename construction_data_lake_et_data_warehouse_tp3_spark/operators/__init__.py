@@ -31,7 +31,6 @@ _MODULES = (
     "text",
     "pipelines",
     "python_udfs",
-    "curation",
     "quality",
     "clustering",
     "graph",
@@ -113,28 +112,23 @@ _DRIVER_PRIORITY = (
     "unpivot_status_revenue",
     "value_percentiles_by_type",
     "weekday_hour_heatmap",
-    "weighted_sample_topk",
     "winsorized_order_stats",
     "y4m_keyframe_sample",
     "ab_test_mannwhitney",
     "array_functions_showcase",
     "basket_lift",
     "bigram_surprisal",
-    "chunk_documents",
-    "cluster_representatives",
     "cms_heavy_hitters",
     "customer_order_counts_left",
     "dau_wau_stickiness",
     "degree_distribution",
     "deterministic_sample",
-    "dup_cluster_size_histogram",
     "dup_rate_by_source",
     "event_funnel",
     "event_transition_matrix",
     "events_json_props",
     "exists_high_qty_orders",
     "feature_hashing",
-    "fixed_k_sample",
     "interpolate_daily_revenue",
     "inverted_index",
     "jl_projection",
@@ -142,7 +136,6 @@ _DRIVER_PRIORITY = (
     "kruskal_wallis_priority",
     "label_centroids",
     "lang_id_confusion",
-    "leakage_safe_split",
     "median_order_value",
     "median_order_value_approx_check",
     "new_vs_returning_revenue",
@@ -174,11 +167,9 @@ _DRIVER_PRIORITY = (
     "apply_in_pandas_group_stats",
     "blacklist_filter",
     "bpe_token_count",
-    "corpus_curation",
     "cosine_topk",
     "cube_revenue",
     "doc_fingerprint",
-    "dup_clusters",
     "embedding_dup_pairs",
     "embedding_dup_pairs_bucketed",
     "fk_miss_detection",
@@ -212,7 +203,6 @@ _DRIVER_PRIORITY = (
     "simhash_hamming_pairs",
     "simhash_signatures",
     "star_schema_revenue",
-    "stratified_sample",
     "string_functions_showcase",
     "text_quality",
     "tfidf_top_terms",
@@ -229,8 +219,6 @@ _DRIVER_PRIORITY = (
     "kmeans_embeddings",
     "lm_surprisal",
     "minhash_lsh_candidates",
-    "mixture_resample",
-    "pack_sequences",
     "pagerank_products",
     "pii_scrub",
     "quality_filters",

@@ -21,7 +21,7 @@ crossJoin against K centroid rows (map-side, no shuffle), ONE
 posexplode→groupBy(cluster, dim) aggregation whose shuffle carries
 K×64 groups after map-side partial aggregation, and an 8-row centroid
 rebuild. Centroids are localCheckpointed per iteration so the iterated
-plan stays linear (same pattern as curation.cluster_edges)."""
+plan stays linear."""
 
 from __future__ import annotations
 

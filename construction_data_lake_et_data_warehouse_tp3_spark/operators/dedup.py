@@ -582,7 +582,8 @@ def jaccard_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The registry's `ppjoin_jaccard_pairs` stays the always-exact form so
     the brute-force oracle proves candidate completeness every round;
-    this router is the shape the curation pipeline calls.
+    this router is the deployment shape bench.py and tools/scale_tier.py
+    time.
 
     The ordered shingle index is built ONCE and localCheckpointed —
     the probe's collect, the exact route's prefix+verify, and the

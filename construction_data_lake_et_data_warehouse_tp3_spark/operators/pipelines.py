@@ -297,9 +297,8 @@ def _duck_ivf_bits() -> str:
 
 def duck_verified_dups_cte() -> str:
     """DuckDB CTE chain ending in `verified(doc_a, doc_b, jaccard)` — the
-    exact oracle twin of minhash_verified_dups. Shared by this module's
-    ORACLE and by curation.dup_clusters's oracle so the edge set feeding
-    cluster assignment can never drift from the verified-dup query."""
+    exact oracle twin of minhash_verified_dups, used by this module's
+    ORACLE."""
     return f"""{duck_lsh_candidates_cte()},
         toks AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM documents),
         wsh AS (

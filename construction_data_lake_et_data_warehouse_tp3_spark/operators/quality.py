@@ -1,6 +1,6 @@
 """Corpus-quality operators — the filter/mix layer a pretraining pipeline
 runs between raw ingest and tokenization (beyond-reference surface, same
-family as text.py/curation.py; Gopher/C4-style rules re-expressed over the
+family as text.py; Gopher/C4-style rules re-expressed over the
 `documents` table):
 
 - quality_filters: per-document heuristic gate (word count, mean word

@@ -62,7 +62,7 @@ OVERLAP_B = "purchase"
 
 def _h(j: int, engine: str) -> str:
     """Independent 52-bit hash j of user_id — identical derivation text
-    on both engines (the curation.weighted_sample_topk idiom)."""
+    on both engines."""
     if engine == "spark":
         return (
             f"CAST(conv(substr(md5('kmv:{j}:' || CAST(user_id AS STRING)),"
@@ -336,7 +336,7 @@ def quantile_sketch_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     CMS = frequency, this = quantiles): per group keep the QSK_K rows
     with the smallest md5(o_orderkey) coins (a uniform sample that is a
     MIN-K MONOID — partitions fold bottom-k locally and merge by
-    re-taking bottom-k, the StreamingFixedKSampler state), then read
+    re-taking bottom-k), then read
     p50/p90 off the sample as disc percentiles and emit the exact
     percentiles and basis-point errors beside them (the approx-_check
     discipline: accuracy is hash-checked, not asserted in prose).

@@ -1,6 +1,5 @@
 from .ann_stream import StreamingVectorIndex  # noqa: F401
 from .anomaly_stream import StreamingAnomalyMonitor, train_baseline  # noqa: F401
-from .curation_stream import StreamingCurator  # noqa: F401
 from .dedup_stream import StreamingDeduper  # noqa: F401
 from .ingest import (  # noqa: F401
     dedup_redelivered,

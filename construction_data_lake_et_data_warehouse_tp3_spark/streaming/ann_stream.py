@@ -1,7 +1,6 @@
 """Incremental vector-index maintenance — the streaming twin of the batch
 IVF path (operators/clustering.ivf_kmeans_topk), completing the pattern of
-streaming twins for the batch curation surface (dedup_stream /
-curation_stream).
+streaming twins for the batch dedup surface (dedup_stream).
 
 A production embedding pipeline trains its coarse quantizer offline and
 then ingests vectors continuously; queries must see every vector ingested

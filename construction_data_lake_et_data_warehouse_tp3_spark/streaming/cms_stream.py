@@ -1,7 +1,7 @@
 """Incremental count-min sketch — the streaming FREQUENCY twin that
 completes the sketch family's continuous story (sketch_stream = KMV
-cardinality, sample_stream = bottom-k sample/quantiles, this = CMS
-counts/heavy-hitters; batch twin operators/pipelines.cms_heavy_hitters).
+cardinality, this = CMS counts/heavy-hitters; batch twin
+operators/pipelines.cms_heavy_hitters).
 
 CMS cells are SUMS, so unlike the min-monoid sketches a replayed batch
 WOULD double-count — this maintainer therefore uses the partials+ledger

@@ -134,67 +134,3 @@ def test_fast_verified_dups_precision_and_recall(spark):
     assert recall_fast >= 0.9
     assert recall_md5 - recall_fast <= 1.0 / len(high) + 1e-9
 
-
-def test_dup_clusters_fast_covers_verified_edges(spark):
-    """Structural lock for the deployment CC twin: every doc in a fast
-    verified pair is clustered, labels are min-reachable (cluster_id <=
-    doc_id), and both endpoints of every edge share a cluster."""
-    from construction_data_lake_et_data_warehouse_tp3_spark.operators.curation import (
-        dup_clusters_fast,
-    )
-    from construction_data_lake_et_data_warehouse_tp3_spark.operators.pipelines import (
-        minhash_verified_dups_fast,
-    )
-
-    edges = [
-        (r.doc_a, r.doc_b)
-        for r in minhash_verified_dups_fast(spark, SF_DIR).collect()
-    ]
-    labels = {r.doc_id: r.cluster_id for r in dup_clusters_fast(spark, SF_DIR).collect()}
-    assert edges, "fixture should contain verified dups"
-    for a, b in edges:
-        assert labels[a] == labels[b], f"edge ({a},{b}) split across clusters"
-    assert all(cid <= d for d, cid in labels.items())
-    assert set(labels) == {d for e in edges for d in e}
-
-
-def test_leakage_split_fast_is_leakage_safe_on_fast_clusters(spark):
-    """The r11 split twin's defining invariant (VERDICT r10 ask #2): the
-    split it emits must be leakage-safe WITH RESPECT TO ITS OWN LABEL
-    SOURCE — every member of a dup_clusters_fast cluster on one side,
-    every doc present exactly once, the coin domain unchanged. The md5
-    form's oracle locks the same property through the registry hash;
-    the twin has no oracle slot (xxhash64 is not DuckDB-expressible),
-    so the invariant is locked structurally here. Membership may differ
-    from the md5 form only where a band-recall miss changes a cluster
-    (one-pair tolerance, locked above) — the INVARIANT holds either way."""
-    from construction_data_lake_et_data_warehouse_tp3_spark.operators.curation import (
-        dup_clusters_fast,
-        leakage_safe_split_fast,
-    )
-    from construction_data_lake_et_data_warehouse_tp3_spark.sources.registry import (
-        load_table,
-    )
-
-    split = leakage_safe_split_fast(spark, SF_DIR)
-    rows = split.collect()
-    n_docs = load_table(spark, SF_DIR, "documents").count()
-    assert len(rows) == n_docs
-    assert len({r.doc_id for r in rows}) == n_docs
-    assert {r.split for r in rows} <= {"train", "eval"}
-    side = {r.doc_id: r.split for r in rows}
-    key = {r.doc_id: r.split_key for r in rows}
-    labels = dup_clusters_fast(spark, SF_DIR).collect()
-    by_cluster = {}
-    for r in labels:
-        by_cluster.setdefault(r.cluster_id, set()).add(r.doc_id)
-    assert by_cluster, "fixture should contain fast dup clusters"
-    for cid, members in by_cluster.items():
-        sides = {side[d] for d in members}
-        assert len(sides) == 1, f"cluster {cid} leaked across sides: {sides}"
-        assert {key[d] for d in members} == {cid}, f"cluster {cid} coined off-key"
-    clustered = {d for m in by_cluster.values() for d in m}
-    unclustered_offkey = [
-        d for d, k in key.items() if d not in clustered and k != d
-    ]
-    assert not unclustered_offkey, unclustered_offkey[:5]

@@ -360,22 +360,6 @@ class TestPlans:
         assert "EqualTo(o_orderstatus,F)" in filters
         assert shuffle_exchange_count(df) <= 3
 
-    def test_pack_sequences_window_is_sharded(self, spark):
-        """The packing cumsum must never plan as a global single-partition
-        window — it partitions by shard (2 shuffles: window + final agg)."""
-        from construction_data_lake_et_data_warehouse_tp3_spark.operators import (
-            curation,
-        )
-        from construction_data_lake_et_data_warehouse_tp3_spark.plans import (
-            explain_str,
-            shuffle_exchange_count,
-        )
-
-        df = curation.pack_sequences(spark, SF_DIR)
-        plan = explain_str(df, "formatted")
-        assert "SinglePartition" not in plan
-        assert shuffle_exchange_count(df) == 2
-
     def test_range_join_is_broadcast_nested_loop(self, spark):
         """Non-equi join against a 5-row band table must broadcast the
         bands (map-side interval tests), never shuffle orders."""

@@ -25,7 +25,7 @@ import __spark_entry__ as entry_mod
 SF_DIR = "/root/testdata/sf0.001"
 
 #: iterative/trained operators whose DataFrame CONSTRUCTION runs jobs
-#: (k-means training, label propagation, PageRank localCheckpoints) —
+#: (k-means training, PageRank localCheckpoints) —
 #: linted implicitly by their own tests, skipped here for suite cost.
 _BUILD_TIME_HEAVY = {
     "ann_index_recall_check",
@@ -34,10 +34,6 @@ _BUILD_TIME_HEAVY = {
     "semdedup_pairs",
     "pagerank_products",
     "triangle_participation",
-    "dup_clusters",
-    "corpus_curation",
-    "cluster_representatives",
-    "leakage_safe_split",
     "minhash_verified_dups",
     "training_manifest",
     "bpe_token_count",
@@ -78,15 +74,13 @@ def test_no_cartesian_and_no_row_python(spark):
 
 
 def test_build_time_heavy_plans_lint_at_tiny_shape(spark, monkeypatch):
-    """The 12 _BUILD_TIME_HEAVY queries are exactly the heaviest plans —
+    """The _BUILD_TIME_HEAVY queries are exactly the heaviest plans —
     the ones where a CartesianProduct or BatchEvalPython would hurt most
     at 100 TB — so they get the SAME mechanical check, just at 1-iteration
     shape: fixed-iteration training constants (Lloyd rounds, PageRank
-    rounds) are patched to 1 so the build-time jobs stay tiny, while the
-    convergence-terminated CC loop keeps its cap (it exits on its own at
-    sf0.001's tiny dup graphs). Sequential, not pooled: these queries RUN
-    jobs during DataFrame construction, and monkeypatched module constants
-    must be visible to each build."""
+    rounds) are patched to 1 so the build-time jobs stay tiny. Sequential,
+    not pooled: these queries RUN jobs during DataFrame construction, and
+    monkeypatched module constants must be visible to each build."""
     from construction_data_lake_et_data_warehouse_tp3_spark.operators import (
         clustering,
         graph,
@@ -118,8 +112,6 @@ _BENCH_ONLY = (
     "jaccard_dup_pairs_router",
     "edit_distance_pairs_capped",
     "minhash_lsh_candidates_fast",
-    "dup_clusters_fast",
-    "leakage_safe_split_fast",
 )
 
 
@@ -156,7 +148,7 @@ def test_bench_lint_covers_every_benched_callable():
 
 def test_bench_only_deployment_forms_lint_clean(spark, monkeypatch):
     """Same mechanical net as the registry lints, for the bench-only
-    lane: sequential at sf0.001 (the router/CC/split forms run jobs at
+    lane: sequential at sf0.001 (the router form runs jobs at
     DataFrame-build time), iteration constants patched tiny exactly like
     test_build_time_heavy_plans_lint_at_tiny_shape."""
     from construction_data_lake_et_data_warehouse_tp3_spark.operators import (

@@ -1,7 +1,6 @@
-"""Planted-case semantics tests for the late-r4 operators: sequence
-packing invariants, edit-distance boundary recall, substring-dedup
-verbatim inclusion + boilerplate cap, triangle counting on a known
-graph, mixture-resample rate laws, and LM-surprisal ordering.
+"""Planted-case semantics tests for the late-r4 operators: edit-distance
+boundary recall, substring-dedup verbatim inclusion + boilerplate cap,
+triangle counting on a known graph, and LM-surprisal ordering.
 
 These complement the oracle-parity suite: parity proves Spark == DuckDB
 on the generated corpus; these prove the operators find what they CLAIM
@@ -13,7 +12,7 @@ import os
 
 import pytest
 
-from construction_data_lake_et_data_warehouse_tp3_spark.operators import curation, dedup, graph, text
+from construction_data_lake_et_data_warehouse_tp3_spark.operators import dedup, graph, text
 
 SF_DIR_01 = "/root/testdata/sf0.01"
 
@@ -53,40 +52,6 @@ def _write_lineitem(spark, tmp_path, order_parts):
         os.path.join(sf_dir, "lineitem.parquet")
     )
     return sf_dir
-
-
-class TestPackSequences:
-    def test_conservation_and_bin_shape(self, spark):
-        """Packing must conserve tokens exactly (every token lands in
-        exactly one bin) and bin ids per shard must be dense from 0."""
-        from pyspark.sql import functions as F
-
-        out = curation.pack_sequences(spark, SF_DIR_01).collect()
-        docs_tokens = (
-            text.token_count(spark, SF_DIR_01)
-            .agg(F.sum("n_tokens").alias("t"))
-            .collect()[0]["t"]
-        )
-        assert sum(r["packed_tokens"] for r in out) == docs_tokens
-        by_shard = {}
-        for r in out:
-            by_shard.setdefault(r["shard"], []).append(r["bin_id"])
-        for shard, bins in by_shard.items():
-            assert sorted(bins) == list(range(len(bins))), (shard, bins)
-
-    def test_split_docs_straddle(self, spark, tmp_path):
-        """A doc whose tokens run past the 512 boundary must be counted
-        as split in the bin it starts in."""
-        # shard 0: doc 0 has 500 tokens, doc 32 has 50 → straddles 512
-        rows = [
-            (0, " ".join(["a"] * 500), "en", "s"),
-            (32, " ".join(["b"] * 50), "en", "s"),
-        ]
-        sf = _write_documents(spark, tmp_path, rows)
-        out = {r["bin_id"]: r for r in curation.pack_sequences(spark, sf).collect()}
-        assert out[0]["n_docs"] == 2
-        assert out[0]["n_split_docs"] == 1  # doc 32 crosses into bin 1
-        assert out[0]["packed_tokens"] == 550
 
 
 class TestEditDistancePairs:
@@ -283,21 +248,6 @@ class TestNewOpPlans:
         filt = plan.find("pmod")
         exch = plan.find("Exchange")
         assert filt != -1 and exch != -1 and filt > exch, (filt, exch)
-
-
-class TestMixtureResample:
-    def test_rate_laws(self, spark):
-        """Rates are capped at 10000 bp, kept counts never exceed
-        originals, and even-suffix sources get the 3x-weight rate."""
-        out = curation.mixture_resample(spark, SF_DIR_01).collect()
-        assert all(0 <= r["rate_bp"] <= 10000 for r in out)
-        assert all(0 <= r["kept_count"] <= r["orig_count"] for r in out)
-        by_parity = {0: set(), 1: set()}
-        for r in out:
-            by_parity[int(r["source"][3:]) % 2].add(r["rate_bp"])
-        # uniform testdata: every even source caps at 10000, odd at 5000
-        assert by_parity[0] == {10000}
-        assert by_parity[1] == {5000}
 
 
 class TestLmSurprisal:

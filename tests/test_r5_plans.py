@@ -6,7 +6,6 @@ from __future__ import annotations
 
 from construction_data_lake_et_data_warehouse_tp3_spark.operators import (
     analytics,
-    curation,
     python_udfs,
     statistics,
     temporal,
@@ -21,15 +20,6 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 class TestR5Plans:
-    def test_chunk_documents_is_map_only(self, spark):
-        """Sliding-window chunking must stay a pure scan→explode pipeline:
-        zero shuffle exchanges (the small-input repartition of the
-        documents loader is round-robin, not a computed shuffle — assert
-        no HASH exchange appears)."""
-        df = curation.chunk_documents(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "hashpartitioning" not in plan
-
     def test_media_decodes_single_python_stage(self, spark):
         """Each real-decode operator runs exactly ONE Arrow-batched Python
         stage (mapInPandas) — a second would mean blobs cross an exchange
@@ -184,40 +174,6 @@ class TestR5cPlans:
 
 
 class TestR5cSamplers:
-    def test_weighted_sample_is_top_k_no_global_sort(self, spark):
-        """A-ES sampling must compile to TakeOrderedAndProject (per-
-        partition top-K), never a global Sort+Exchange of the corpus."""
-        from construction_data_lake_et_data_warehouse_tp3_spark.operators import (
-            curation,
-        )
-
-        df = curation.weighted_sample_topk(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "TakeOrderedAndProject" in plan
-
-    def test_weighted_sample_prefers_heavy_orders(self, spark):
-        """Inclusion odds ∝ weight: the sampled orders' mean value must
-        exceed the corpus mean (a uniform sampler would match it)."""
-        from construction_data_lake_et_data_warehouse_tp3_spark.operators import (
-            curation,
-        )
-        from construction_data_lake_et_data_warehouse_tp3_spark.sources.registry import (
-            load_table,
-        )
-        from pyspark.sql import functions as F
-
-        sample_mean = (
-            curation.weighted_sample_topk(spark, SF_DIR)
-            .agg(F.avg("weight_cents"))
-            .collect()[0][0]
-        )
-        corpus_mean = (
-            load_table(spark, SF_DIR, "orders")
-            .agg(F.avg(F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")))
-            .collect()[0][0]
-        )
-        assert sample_mean > corpus_mean * 1.1
-
     def test_frame_sample_stride_halves_rows(self, spark):
         """every_n=2 keeps frame 0 only of the 2-frame clips — the
         sampling knob is real, not cosmetic."""

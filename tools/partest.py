@@ -37,10 +37,8 @@ TESTS = os.path.join(REPO, "tests")
 #: balance, never correctness.
 COSTS = {
     "test_statistics_invariants.py": 52,
-    "test_cluster_stream.py": 225,
     "test_manifest_stream.py": 45,
     "test_cms_stream.py": 27,
-    "test_sample_stream.py": 25,
     "test_empty_input.py": 14,
     "test_singleton_input.py": 32,
     "test_zero_vector_input.py": 12,
@@ -73,8 +71,6 @@ COSTS = {
     "test_sketches.py": 9,
     "test_rate_stream_live.py": 8,
     "test_clustering.py": 14,
-    "test_curation.py": 30,
-    "test_curation_stream.py": 11,
     "test_quality.py": 7,
     "test_r5f_ops.py": 7,
     "test_timetravel_schema.py": 7,

@@ -54,25 +54,13 @@ QUERIES = (
     "kcore_products",
     "kmeans_embeddings",
     "ppjoin_jaccard_pairs",
-    "leakage_safe_split",
     "shingle_containment_pairs",
     "item_similarity_topk",
     "basket_lift",
     "minhash_lsh_candidates",
     "edit_distance_pairs",
-    # r10: the connected-components pipeline (the one heavy pipeline
-    # without a tier row until now, VERDICT r9 ask #2), the xxhash64
-    # minhash deployment twin (ask #5), and the CC deployment twin the
-    # r10 phase profile motivated (53% of dup_clusters' 100x wall was
-    # md5 minhash candidate generation)
-    "dup_clusters",
+    # r10: the xxhash64 minhash deployment twin (VERDICT r9 ask #5)
     "minhash_lsh_candidates_fast",
-    "dup_clusters_fast",
-    # r11: the split twin on the xxhash64 CC labels (VERDICT r10 ask #2
-    # — leakage_safe_split was the last heavy pipeline without a second
-    # decade after its r9 retraction; the md5 form measures in
-    # TIER100_QUERIES, this twin carries the strict gate)
-    "leakage_safe_split_fast",
 )
 
 #: VERDICT r8 ask #1 / r9 ask #6 — the SECOND measured decade
@@ -89,8 +77,6 @@ TIER100_QUERIES = (
     "semdedup_pairs",
     "jaccard_dup_pairs",
     "kcore_products",
-    "dup_clusters",
-    "dup_clusters_fast",
     "kmeans_embeddings",
     "basket_lift",
     "item_similarity_topk",
@@ -99,11 +85,6 @@ TIER100_QUERIES = (
     "shingle_containment_pairs",
     "edit_distance_pairs",
     "edit_distance_pairs_capped",
-    # r11 (VERDICT r10 ask #2): the most expensive bench query gets its
-    # missing second decade — md5 form under a documented allowance,
-    # fast-label twin on the strict gate
-    "leakage_safe_split",
-    "leakage_safe_split_fast",
 )
 
 #: THIRD measured decade (1000x-sf0.1: 5M docs, documents-only — the
@@ -111,13 +92,12 @@ TIER100_QUERIES = (
 #: binds LATE on closed vocab, the 100x slope2 alone cannot distinguish
 #: "transitional regime approaching the cap" from "compounding
 #:  quadratic"; the third decade does. Opt-in (hours-scale walls);
-#: only documents-reading queries are valid here. r11 adds the two
-#: xxhash64 deployment defaults (VERDICT r10 ask #6): their strict <10
+#: only documents-reading queries are valid here. r11 adds the xxhash64
+#: minhash deployment default (VERDICT r10 ask #6): its strict <10
 #: slope2 deserves the same closed-vocab flattening proof edit-capped
-#: got before a 5M-doc corpus surprises them.
+#: got before a 5M-doc corpus surprises it.
 TIER1000_QUERIES = (
     "edit_distance_pairs_capped",
-    "dup_clusters_fast",
     "minhash_lsh_candidates_fast",
 )
 
@@ -148,7 +128,7 @@ def _gen_documents(rng: np.random.Generator, out: str, n: int) -> None:
         " ".join(rng.choice(vocab, size=int(ln))) for ln in lengths
     ]
     # plant ~5% near-duplicates (copy an earlier doc, swap two words):
-    # the LSH→verify→CC pipelines cost tracks DUP DENSITY, so a tier
+    # the LSH→verify pipelines' cost tracks DUP DENSITY, so a tier
     # with zero planted structure understates their work (the r7
     # leakage_safe_split 0.62x row); 5% at ~2 edits keeps the dup rate
     # in the testdata's ballpark while still exceeding the verify
@@ -438,14 +418,7 @@ def main() -> int:
     queries = dict(all_queries())
     # deployment forms: same (spark, sf_dir) shape, live outside the
     # capped registry (their exact/md5 twins keep the oracle slots)
-    from construction_data_lake_et_data_warehouse_tp3_spark.operators.curation import (
-        dup_clusters_fast,
-        leakage_safe_split_fast,
-    )
-
     queries.setdefault("jaccard_dup_pairs", jaccard_dup_pairs)
-    queries.setdefault("dup_clusters_fast", dup_clusters_fast)
-    queries.setdefault("leakage_safe_split_fast", leakage_safe_split_fast)
     queries.setdefault("edit_distance_pairs_capped", edit_distance_pairs_capped)
     queries.setdefault("minhash_lsh_candidates_fast", minhash_lsh_candidates_fast)
 
