@@ -10,10 +10,12 @@ Reference behaviors re-expressed Spark-first:
   dynamic partition overwrite; N auto-increments from the directory
   listing exactly like `_get_next_version`.
 - `_metadata.json` running stats (export_to_data_lake.py:277-328) →
-  per-partition record/size stats computed from the committed files.
+  per-partition record/size stats: the record count rides the write job
+  as an Observation, the size comes from the committed files.
 
-Scale notes: writers never collect data to the driver; stats come from
-file-system listing (O(partitions), not O(rows)). At 100 TB the date
+Scale notes: writers never collect data to the driver and never re-run
+the input plan to count it; sizes come from file-system listing
+(O(partitions), not O(rows)). At 100 TB the date
 partitioning bounds every retention delete and every time-ranged scan to
 partition pruning; version overwrite touches one version directory.
 """
@@ -25,7 +27,7 @@ import json
 import os
 from datetime import date, datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import FeedCatalog, FeedConfig, PartitioningType
@@ -37,6 +39,13 @@ def _dir_size_mb(path: str) -> float:
         for name in files:
             total += os.path.getsize(os.path.join(root, name))
     return round(total / (1024 * 1024), 6)
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """df with a row count riding its write job: read
+    ``obs.get["records"]`` after the write, no second job re-runs df."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("records")), obs
 
 
 class DataLakeWriter:
@@ -73,18 +82,18 @@ class DataLakeWriter:
                 .withColumn("month", F.month(event_time_col))
                 .withColumn("day", F.dayofmonth(event_time_col))
             )
-            out.write.mode("append").partitionBy("year", "month", "day").parquet(path)
-            return self._update_metadata(config, "event-time multi-partition", df)
-        when = partition_date or datetime.now(timezone.utc).date()
-        out = (
-            df.withColumn("year", F.lit(when.year))
-            .withColumn("month", F.lit(when.month))
-            .withColumn("day", F.lit(when.day))
-        )
+            partition = "event-time multi-partition"
+        else:
+            when = partition_date or datetime.now(timezone.utc).date()
+            out = (
+                df.withColumn("year", F.lit(when.year))
+                .withColumn("month", F.lit(when.month))
+                .withColumn("day", F.lit(when.day))
+            )
+            partition = f"year={when.year}/month={when.month}/day={when.day}"
+        out, obs = _counted(out)
         out.write.mode("append").partitionBy("year", "month", "day").parquet(path)
-        return self._update_metadata(
-            config, f"year={when.year}/month={when.month}/day={when.day}", df
-        )
+        return self._update_metadata(config, partition, obs.get["records"])
 
     # ---- tables: version-partitioned overwrite (#9, #41) ---------------
     #
@@ -193,11 +202,12 @@ class DataLakeWriter:
             return {"skipped": "empty"}
         n = version if version is not None else self.claim_version(config)
         path = os.path.join(self.catalog.feed_data_path(config), f"version=v{n}")
-        writer = df.write.mode("overwrite")
+        out, obs = _counted(df)
+        writer = out.write.mode("overwrite")
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
         writer.parquet(path)
-        meta = self._update_metadata(config, f"version=v{n}", df)
+        meta = self._update_metadata(config, f"version=v{n}", obs.get["records"])
         self._commit_version(config, n, meta["records"])
         if config.keep_versions:
             from .retention import apply_version_retention
@@ -255,7 +265,7 @@ class DataLakeWriter:
         os.makedirs(meta_dir, exist_ok=True)
         return os.path.join(meta_dir, f"{config.feed_name}_metadata.json")
 
-    def _update_metadata(self, config: FeedConfig, partition: str, df: DataFrame) -> dict:
+    def _update_metadata(self, config: FeedConfig, partition: str, records: int) -> dict:
         """Read-modify-write of the feed's stats sidecar, serialized by an
         O_EXCL lock file so concurrent exporters (now legal, see commit
         log above) can't lose each other's partition entries. Locks older
@@ -286,7 +296,7 @@ class DataLakeWriter:
                     continue
                 time.sleep(0.01)
         try:
-            return self._update_metadata_locked(config, partition, df)
+            return self._update_metadata_locked(config, partition, records)
         finally:
             try:
                 os.unlink(lock)
@@ -294,7 +304,7 @@ class DataLakeWriter:
                 pass
 
     def _update_metadata_locked(
-        self, config: FeedConfig, partition: str, df: DataFrame
+        self, config: FeedConfig, partition: str, records: int
     ) -> dict:
         path = self._metadata_path(config)
         meta = {
@@ -311,7 +321,6 @@ class DataLakeWriter:
         if os.path.exists(path):
             with open(path) as fh:
                 meta = json.load(fh)
-        records = df.count()
         part_path = os.path.join(self.catalog.feed_data_path(config), partition)
         size_mb = _dir_size_mb(part_path)
         entry = {

@@ -137,6 +137,35 @@ class TestWriter:
         assert kept == [3, 4, 5]  # newest keep_versions survive
         assert writer.read_table_feed(config).count() == 5  # latest readable
 
+    def test_export_table_counts_rows_in_the_write_job(self, spark, catalog, tmp_path):
+        """export_table's Spark jobs are the isEmpty() guard and the write,
+        exactly as many as running those two directly: the row count rides
+        the write job, and no count() job re-runs the input plan after it."""
+        import uuid
+
+        config = catalog.add(table_cfg())
+        writer = DataLakeWriter(spark, catalog)
+        df = spark.range(20).selectExpr("id", "id * 1.5 AS v")
+        sc = spark.sparkContext
+
+        def jobs(fn):
+            group = f"test-export-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            try:
+                result = fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(sc.statusTracker().getJobIdsForGroup(group)), result
+
+        def guard_and_write():
+            assert not df.isEmpty()
+            df.write.mode("overwrite").parquet(str(tmp_path / "direct"))
+
+        direct, _ = jobs(guard_and_write)
+        exported, meta = jobs(lambda: writer.export_table(df, config))
+        assert meta["records"] == 20
+        assert exported == direct, (exported, direct)
+
 
 class TestRetention:
     def test_stream_retention_dry_run_and_delete(self, spark, catalog):
