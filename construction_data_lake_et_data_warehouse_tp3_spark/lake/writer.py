@@ -15,9 +15,9 @@ Reference behaviors re-expressed Spark-first:
 
 Scale notes: writers never collect data to the driver and never re-run
 the input plan to count it; sizes come from file-system listing
-(O(partitions), not O(rows)). At 100 TB the date
-partitioning bounds every retention delete and every time-ranged scan to
-partition pruning; version overwrite touches one version directory.
+(O(partitions), not O(rows)). At 100 TB the date partitioning bounds
+every retention delete and every time-ranged scan to partition pruning;
+version overwrite touches one version directory.
 """
 
 from __future__ import annotations
