@@ -27,9 +27,18 @@ from __future__ import annotations
 
 from collections.abc import Mapping
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
+
+
+def counted(df: DataFrame, *metrics: Column) -> tuple[DataFrame, Observation]:
+    """df with its row count (and any extra aggregate ``metrics``) riding
+    the job that writes it: read ``obs.get["records"]`` after the write;
+    no second job re-runs df to count it. Observe the frame the write
+    takes: AQE can drop a join branch it finds empty, Observation and all."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("records"), *metrics), obs
 
 
 class ExpectationError(ValueError):

@@ -12,8 +12,10 @@ its `version=vN` directory name before the write starts.
 
 Design (Delta/Iceberg-shaped, filesystem-atomic primitives only):
 
-- every table write stages into `tables/<name>/_txn_<id>/` — underscore
-  prefix, so Spark's file index never lists it as data;
+- every table write stages into `tables/<name>/_txn_<id>_<seq>/data/`:
+  the underscore keeps staging out of any listing of `tables/<name>/`,
+  and the plain leaf name is what readers are handed, so Spark does not
+  take the path itself for a hidden one;
 - `commit()` publishes ONE manifest `_txn_log/<n>.json` via write-temp +
   os.rename (atomic) after claiming slot n with an O_EXCL `.claim` —
   two committers can never take the same snapshot number;
@@ -35,6 +37,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import pathlib
 import shutil
 import time
 import uuid
@@ -42,7 +45,15 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.observation import Observation
+
+from .observe import counted
+
+
+def _txn_dir(root: str, rel: str) -> str:
+    """The `tables/<name>/_txn_*` directory holding a staged write: the
+    parent of its `data` leaf, or the staged path itself in manifests
+    written before the leaf existed."""
+    return os.path.normpath(os.path.join(root, *pathlib.PurePath(rel).parts[:3]))
 
 
 class TxnConflictError(RuntimeError):
@@ -61,9 +72,10 @@ class LakeTransaction:
         self.committed: int | None = None
         self._seq = 0
 
-    def write(self, table: str, df: DataFrame) -> None:
+    def write(self, table: str, df: DataFrame) -> int:
         """Stage df as this transaction's state for `table` (full
-        snapshot semantics, like a version-partitioned overwrite).
+        snapshot semantics, like a version-partitioned overwrite);
+        returns the rows written, counted by the write job itself.
         Re-staging the same table lands in a FRESH dir — df may derive
         from this transaction's previous staged state (iterated MERGEs),
         and Spark cannot read and overwrite one path in a single job;
@@ -71,15 +83,12 @@ class LakeTransaction:
         if self.committed is not None:
             raise RuntimeError("transaction already committed")
         self._seq += 1
-        rel = os.path.join("tables", table, f"_txn_{self.txn_id}_{self._seq}")
-        dest = os.path.join(self.lakehouse.root, rel)
-        # the row count rides the write job: no second job reads it back
-        obs = Observation()
-        df.observe(obs, F.count(F.lit(1)).alias("records")).write.mode(
-            "overwrite"
-        ).parquet(dest)
+        rel = os.path.join("tables", table, f"_txn_{self.txn_id}_{self._seq}", "data")
+        out, obs = counted(df)
+        out.write.mode("overwrite").parquet(os.path.join(self.lakehouse.root, rel))
         self.staged[table] = rel
         self.records[table] = obs.get["records"]
+        return self.records[table]
 
     def read_staged(self, table: str) -> DataFrame:
         """This transaction's current view of `table`: its own staged
@@ -130,7 +139,7 @@ class LakeTransaction:
         if self.committed is not None:
             raise RuntimeError("transaction already committed")
         for rel in self.staged.values():
-            shutil.rmtree(os.path.join(self.lakehouse.root, rel), ignore_errors=True)
+            shutil.rmtree(_txn_dir(self.lakehouse.root, rel), ignore_errors=True)
         self.staged.clear()
         self.records.clear()
         self.lakehouse._clear_active(self.txn_id)
@@ -157,8 +166,8 @@ class TxnTable:
     def read(self) -> DataFrame:
         return self.txn.read_staged(self.name)
 
-    def overwrite(self, df: DataFrame) -> None:
-        self.txn.write(self.name, df)
+    def overwrite(self, df: DataFrame) -> int:
+        return self.txn.write(self.name, df)
 
 
 class Lakehouse:
@@ -305,17 +314,14 @@ class Lakehouse:
             for c in (c for c in commits if c <= n):  # ascending: later wins
                 for table, rel in manifests[c]["tables"].items():
                     resolved[table] = rel
-            live.update(
-                os.path.normpath(os.path.join(self.root, rel))
-                for rel in resolved.values()
-            )
+            live.update(_txn_dir(self.root, rel) for rel in resolved.values())
         # a txn_id appearing in any committed manifest is definitively
         # DONE — its unreferenced staging (superseded re-stages) is
         # reclaimable immediately, no age heuristic needed
         done_txns = {m.get("txn_id") for m in manifests.values()}
         removed = []
         for staged in glob.glob(os.path.join(self.root, "tables", "*", "_txn_*")):
-            if os.path.normpath(staged) in live:
+            if os.path.normpath(staged) in live:  # never a live `…/data`
                 continue
             # dir name is _txn_<id>_<seq>; <id> is fixed-width hex
             txn_id = os.path.basename(staged)[len("_txn_"):].rsplit("_", 1)[0]

@@ -10,14 +10,16 @@ Reference behaviors re-expressed Spark-first:
   dynamic partition overwrite; N auto-increments from the directory
   listing exactly like `_get_next_version`.
 - `_metadata.json` running stats (export_to_data_lake.py:277-328) →
-  per-partition record/size stats: the record count rides the write job
-  as an Observation, the size comes from the committed files.
+  per-partition record/size stats read from the committed files, so an
+  append adds to its partition's entry; the batch's own row count and
+  the partitions it touched ride the write job as an Observation.
 
 Scale notes: writers never collect data to the driver and never re-run
-the input plan to count it; sizes come from file-system listing
-(O(partitions), not O(rows)). At 100 TB the date partitioning bounds
-every retention delete and every time-ranged scan to partition pruning;
-version overwrite touches one version directory.
+the input plan to count it; stats come from the listing and parquet
+footers of the touched partitions (O(files), not O(rows)). At 100 TB
+the date partitioning bounds every retention delete and every
+time-ranged scan to partition pruning; version overwrite touches one
+version directory.
 """
 
 from __future__ import annotations
@@ -27,25 +29,27 @@ import json
 import os
 from datetime import date, datetime, timezone
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import FeedCatalog, FeedConfig, PartitioningType
+from .observe import counted
 
 
-def _dir_size_mb(path: str) -> float:
-    total = 0
-    for root, _dirs, files in os.walk(path):
+def _partition_stats(path: str) -> tuple[int, float]:
+    """(rows, MB) committed under one partition directory: sizes from the
+    listing, rows from the parquet footers; in-flight `_temporary` output
+    is skipped."""
+    import pyarrow.parquet as pq
+
+    rows = size = 0
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         for name in files:
-            total += os.path.getsize(os.path.join(root, name))
-    return round(total / (1024 * 1024), 6)
-
-
-def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
-    """df with a row count riding its write job: read
-    ``obs.get["records"]`` after the write, no second job re-runs df."""
-    obs = Observation()
-    return df.observe(obs, F.count(F.lit(1)).alias("records")), obs
+            size += os.path.getsize(os.path.join(root, name))
+            if name.endswith(".parquet"):
+                rows += pq.read_metadata(os.path.join(root, name)).num_rows
+    return rows, round(size / (1024 * 1024), 6)
 
 
 class DataLakeWriter:
@@ -82,7 +86,6 @@ class DataLakeWriter:
                 .withColumn("month", F.month(event_time_col))
                 .withColumn("day", F.dayofmonth(event_time_col))
             )
-            partition = "event-time multi-partition"
         else:
             when = partition_date or datetime.now(timezone.utc).date()
             out = (
@@ -90,10 +93,12 @@ class DataLakeWriter:
                 .withColumn("month", F.lit(when.month))
                 .withColumn("day", F.lit(when.day))
             )
-            partition = f"year={when.year}/month={when.month}/day={when.day}"
-        out, obs = _counted(out)
+        day = F.format_string("year=%d/month=%d/day=%d", "year", "month", "day")
+        out, obs = counted(out, F.collect_set(day).alias("partitions"))
         out.write.mode("append").partitionBy("year", "month", "day").parquet(path)
-        return self._update_metadata(config, partition, obs.get["records"])
+        return self._update_metadata(
+            config, sorted(obs.get["partitions"]), obs.get["records"]
+        )
 
     # ---- tables: version-partitioned overwrite (#9, #41) ---------------
     #
@@ -202,12 +207,12 @@ class DataLakeWriter:
             return {"skipped": "empty"}
         n = version if version is not None else self.claim_version(config)
         path = os.path.join(self.catalog.feed_data_path(config), f"version=v{n}")
-        out, obs = _counted(df)
+        out, obs = counted(df)
         writer = out.write.mode("overwrite")
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
         writer.parquet(path)
-        meta = self._update_metadata(config, f"version=v{n}", obs.get["records"])
+        meta = self._update_metadata(config, [f"version=v{n}"], obs.get["records"])
         self._commit_version(config, n, meta["records"])
         if config.keep_versions:
             from .retention import apply_version_retention
@@ -265,7 +270,9 @@ class DataLakeWriter:
         os.makedirs(meta_dir, exist_ok=True)
         return os.path.join(meta_dir, f"{config.feed_name}_metadata.json")
 
-    def _update_metadata(self, config: FeedConfig, partition: str, records: int) -> dict:
+    def _update_metadata(
+        self, config: FeedConfig, partitions: list[str], records: int
+    ) -> dict:
         """Read-modify-write of the feed's stats sidecar, serialized by an
         O_EXCL lock file so concurrent exporters (now legal, see commit
         log above) can't lose each other's partition entries. Locks older
@@ -296,7 +303,7 @@ class DataLakeWriter:
                     continue
                 time.sleep(0.01)
         try:
-            return self._update_metadata_locked(config, partition, records)
+            return self._update_metadata_locked(config, partitions, records)
         finally:
             try:
                 os.unlink(lock)
@@ -304,8 +311,11 @@ class DataLakeWriter:
                 pass
 
     def _update_metadata_locked(
-        self, config: FeedConfig, partition: str, records: int
+        self, config: FeedConfig, partitions: list[str], records: int
     ) -> dict:
+        """Refresh the entry of every partition the export touched from
+        what is on disk now; returns the export's own records and the
+        touched partitions' size."""
         path = self._metadata_path(config)
         meta = {
             "source": config.source,
@@ -321,22 +331,21 @@ class DataLakeWriter:
         if os.path.exists(path):
             with open(path) as fh:
                 meta = json.load(fh)
-        part_path = os.path.join(self.catalog.feed_data_path(config), partition)
-        size_mb = _dir_size_mb(part_path)
-        entry = {
-            "path": partition,
-            "records": records,
-            "size_mb": size_mb,
-            "exported_at": datetime.now(timezone.utc).isoformat(),
-        }
-        existing = [p for p in meta["partitions"] if p["path"] == partition]
-        if existing:  # #25 partition-info merge (export_to_data_lake.py:313-322)
-            existing[0].update(entry)
-        else:
-            meta["partitions"].append(entry)
+        exported_at = datetime.now(timezone.utc).isoformat()
+        # #25 partition-info merge (export_to_data_lake.py:313-322)
+        entries = {p["path"]: p for p in meta["partitions"]}
+        for partition in partitions:
+            rows, mb = _partition_stats(
+                os.path.join(self.catalog.feed_data_path(config), partition)
+            )
+            entries.setdefault(partition, {"path": partition}).update(
+                records=rows, size_mb=mb, exported_at=exported_at
+            )
+        meta["partitions"] = list(entries.values())
         meta["total_records"] = sum(p["records"] for p in meta["partitions"])
         meta["total_size_mb"] = round(sum(p["size_mb"] for p in meta["partitions"]), 6)
-        meta["last_export"] = entry["exported_at"]
+        meta["last_export"] = exported_at
         with open(path, "w") as fh:
             json.dump(meta, fh, indent=2)
-        return {"partition": partition, "records": records, "size_mb": size_mb}
+        size_mb = round(sum(entries[p]["size_mb"] for p in partitions), 6)
+        return {"partitions": partitions, "records": records, "size_mb": size_mb}

@@ -75,7 +75,9 @@ class StreamingVectorIndex:
             .select("vec_id", "cid", "vint")
             .withColumn("qfp", F.lit(self.qfp))
         )
-        return merge_into(self.table, assigned, ("vec_id",), stamp_updated_at=False)
+        return merge_into(
+            self.table, assigned, ("vec_id",), stamp_updated_at=False
+        )["upserted"]
 
     def attach(self, stream: DataFrame, checkpoint: str):
         """Run the index maintenance as a foreachBatch streaming query."""

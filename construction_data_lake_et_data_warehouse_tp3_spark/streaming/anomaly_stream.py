@@ -106,7 +106,7 @@ class StreamingAnomalyMonitor:
         )
         if flagged.isEmpty():
             return 0
-        return merge_into(self.alerts, flagged, (self.id_col,))
+        return merge_into(self.alerts, flagged, (self.id_col,))["upserted"]
 
     def attach(self, stream: DataFrame, checkpoint: str):
         return (

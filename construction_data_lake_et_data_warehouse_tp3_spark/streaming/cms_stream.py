@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..operators.pipelines import _CMS_BUCKET, CMS_DEPTH
 from ..warehouse.merge import ParquetTable, merge_into
+from .warehouse_sink import batch_applied
 
 #: sentinel batch_id for compacted rows (real batch ids are ≥ 0)
 _COMPACTED = -1
@@ -45,18 +46,10 @@ class StreamingCountMin:
         self.cells = ParquetTable(spark, os.path.join(store_root, "cells"))
         self.applied = ParquetTable(spark, os.path.join(store_root, "applied"))
 
-    def _is_applied(self, batch_id: int) -> bool:
-        if not self.applied.exists():
-            return False
-        return (
-            self.applied.read().where(F.col("batch_id") == batch_id).limit(1).count()
-            > 0
-        )
-
     def process_batch(self, tokens: DataFrame, batch_id: int) -> int:
         """Fold one micro-batch of token rows; replays are no-ops.
         Returns the number of (d, bucket) cells the batch touched."""
-        if self._is_applied(batch_id):
+        if batch_applied(self.applied, batch_id):
             return 0
         counts = tokens.groupBy("token").agg(F.count("*").alias("n"))
         incr = (
@@ -68,7 +61,7 @@ class StreamingCountMin:
             .agg(F.expr("CAST(sum(n) AS BIGINT)").alias("cell"))
             .withColumn("batch_id", F.lit(batch_id).cast("long"))
         )
-        n = merge_into(self.cells, incr, ("d", "bucket", "batch_id"))
+        n = merge_into(self.cells, incr, ("d", "bucket", "batch_id"))["upserted"]
         ledger = self.spark.createDataFrame([(batch_id,)], "batch_id long")
         merge_into(self.applied, ledger, ("batch_id",))
         return n
@@ -109,7 +102,7 @@ class StreamingCountMin:
         Only LEDGERED partials fold into the sentinel: a batch that
         crashed between the cells merge and the applied merge in
         process_batch has partials but no ledger row, and its replay
-        passes the _is_applied check — folding those partials would
+        passes the batch_applied check — folding those partials would
         double-count the batch once the replay re-merges them.  Such
         unledgered rows keep their (d, bucket, batch_id) identity so
         the replay's merge_into overwrites them idempotently."""
@@ -135,13 +128,9 @@ class StreamingCountMin:
             .agg(F.expr("CAST(sum(cell) AS BIGINT)").alias("cell"))
             .withColumn("batch_id", F.lit(_COMPACTED).cast("long"))
         )
-        rows = folded.unionByName(
-            unledgered.select("d", "bucket", "cell", "batch_id")
-        ).persist()
-        n = rows.count()
-        self.cells.overwrite(rows.select("d", "bucket", "cell", "batch_id"))
-        rows.unpersist()
-        return n
+        return self.cells.overwrite(
+            folded.unionByName(unledgered.select("d", "bucket", "cell", "batch_id"))
+        )
 
     def attach(self, stream: DataFrame, checkpoint: str):
         return (

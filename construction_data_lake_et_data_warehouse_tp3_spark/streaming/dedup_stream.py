@@ -98,7 +98,7 @@ class StreamingDeduper:
         )
         return merge_into(
             self.pair_table, pairs, ["doc_a", "doc_b"], stamp_updated_at=False
-        )
+        )["upserted"]
 
     # ---- streaming attachment -------------------------------------------
 

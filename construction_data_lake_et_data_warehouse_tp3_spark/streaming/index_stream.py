@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from ..operators.dedup import TOKENS
 from ..operators.retrieval import BM25_TOP_K, _bm25_contrib
 from ..warehouse.merge import ParquetTable, merge_into
+from .warehouse_sink import batch_applied
 
 #: sentinel batch_id for compacted rows (real batch ids are ≥ 0)
 _COMPACTED = -1
@@ -56,18 +57,10 @@ class StreamingIndexStats:
         self.applied = ParquetTable(spark, os.path.join(store_root, "applied"))
 
     # ------------------------------------------------------------------
-    def _is_applied(self, batch_id: int) -> bool:
-        if not self.applied.exists():
-            return False
-        return (
-            self.applied.read().where(F.col("batch_id") == batch_id).limit(1).count()
-            > 0
-        )
-
     def process_batch(self, batch: DataFrame, batch_id: int) -> int:
         """Fold one micro-batch of documents (doc_id, text) into the
         index stats; replays are no-ops.  Returns upserted term rows."""
-        if self._is_applied(batch_id):
+        if batch_applied(self.applied, batch_id):
             return 0
         base = batch.select("doc_id", F.expr(TOKENS).alias("ws"))
         terms = (
@@ -80,7 +73,7 @@ class StreamingIndexStats:
             F.count("*").alias("n_docs"),
             F.expr("CAST(sum(size(ws)) AS BIGINT)").alias("total_tokens"),
         ).withColumn("batch_id", F.lit(batch_id).cast("long"))
-        n = merge_into(self.term_partials, terms, ("term", "batch_id"))
+        n = merge_into(self.term_partials, terms, ("term", "batch_id"))["upserted"]
         merge_into(self.global_partials, globals_, ("batch_id",))
         ledger = self.spark.createDataFrame([(batch_id,)], "batch_id long")
         merge_into(self.applied, ledger, ("batch_id",))
@@ -119,10 +112,7 @@ class StreamingIndexStats:
         terms = self.term_df().withColumn(
             "batch_id", F.lit(_COMPACTED).cast("long")
         )
-        rows = terms.persist()
-        n = rows.count()
-        self.term_partials.overwrite(rows.select("term", "df", "batch_id"))
-        rows.unpersist()
+        n = self.term_partials.overwrite(terms.select("term", "df", "batch_id"))
         g = self.stats().withColumn("batch_id", F.lit(_COMPACTED).cast("long"))
         self.global_partials.overwrite(
             g.select("n_docs", "total_tokens", "batch_id")

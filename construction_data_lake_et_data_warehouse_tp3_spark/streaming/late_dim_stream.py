@@ -93,14 +93,11 @@ class LateDimEnricher:
             survivors = remisses.join(meta, self.fact_id).withColumn(
                 "retry_count", F.col("retry_count") + 1
             )
-            surv_p = survivors.persist()
-            surv_p.count()
-            self.pending.overwrite(surv_p)
-            surv_p.unpersist()
+            self.pending.overwrite(survivors)
             rehits_p.unpersist()
 
         hits, misses = self._split(facts, dim)
-        n_hits = merge_into(self.enriched, hits, (self.fact_id,))
+        n_hits = merge_into(self.enriched, hits, (self.fact_id,))["upserted"]
         stamped = misses.withColumn(
             "first_batch_id", F.lit(batch_id).cast("long")
         ).withColumn("retry_count", F.lit(0))
@@ -125,7 +122,7 @@ class LateDimEnricher:
                 )
                 .drop("__prior_first", "__prior_retries")
             )
-        n_parked = merge_into(self.pending, stamped, (self.fact_id,))
+        n_parked = merge_into(self.pending, stamped, (self.fact_id,))["upserted"]
         return {"hits": n_hits, "parked": n_parked, "recovered": n_recovered}
 
     # ------------------------------------------------------------------

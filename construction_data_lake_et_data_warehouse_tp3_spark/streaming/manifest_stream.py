@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from ..operators.quality import EVAL_MOD, _SHINGLES, TOKENS, quality_signals
 from ..warehouse.merge import ParquetTable, merge_into
+from .warehouse_sink import batch_applied
 
 
 class StreamingManifest:
@@ -80,20 +81,12 @@ class StreamingManifest:
             [], "source string, n_docs bigint, n_tokens bigint, batch_id long"
         )
 
-    def _is_applied(self, batch_id: int) -> bool:
-        if not self.applied.exists():
-            return False
-        return (
-            self.applied.read().where(F.col("batch_id") == batch_id).limit(1).count()
-            > 0
-        )
-
     # ---- the foreachBatch body ------------------------------------------
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> dict:
         """Fold one micro-batch of (doc_id, text, source) rows; replays
         are no-ops. Returns {candidates, hashes} counts."""
-        if self._is_applied(batch_id):
+        if batch_applied(self.applied, batch_id):
             return {"candidates": 0, "hashes": 0}
 
         hashed = batch.withColumn("h", F.md5("text"))
@@ -104,10 +97,8 @@ class StreamingManifest:
             .unionByName(batch_owners)
             .groupBy("h")
             .agg(F.min("owner").alias("owner"))
-            .localCheckpoint(eager=True)  # sever lineage before the swap
         )
-        n_hashes = folded.count()
-        self.owner_table.overwrite(folded)
+        n_hashes = self.owner_table.overwrite(folded)
 
         ev = F.array(*[F.lit(s) for s in self.eval_shingles])
         cand = (
@@ -120,7 +111,7 @@ class StreamingManifest:
         )
         n_cand = merge_into(
             self.cand_table, cand, ("doc_id",), stamp_updated_at=False
-        )
+        )["upserted"]
 
         counts = batch.groupBy("source").agg(
             F.expr("CAST(count(*) AS BIGINT)").alias("n_docs"),

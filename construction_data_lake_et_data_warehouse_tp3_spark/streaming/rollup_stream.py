@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..warehouse.merge import ParquetTable, merge_into
+from .warehouse_sink import batch_applied
 
 #: sentinel batch_id for compacted history rows (real batch ids are ≥ 0)
 _COMPACTED = -1
@@ -79,21 +80,13 @@ class StreamingRollup:
             .withColumn("batch_id", F.lit(batch_id).cast("long"))
         )
 
-    def _is_applied(self, batch_id: int) -> bool:
-        if not self.applied.exists():
-            return False
-        return (
-            self.applied.read().where(F.col("batch_id") == batch_id).limit(1).count()
-            > 0
-        )
-
     def process_batch(self, batch: DataFrame, batch_id: int) -> int:
         """Fold one micro-batch into the aggregate; replays are no-ops."""
-        if self._is_applied(batch_id):
+        if batch_applied(self.applied, batch_id):
             return 0
         upserted = merge_into(
             self.partials, self._partials_of(batch, batch_id), ("bucket", "batch_id")
-        )
+        )["upserted"]
         ledger = self.spark.createDataFrame([(batch_id,)], "batch_id long")
         merge_into(self.applied, ledger, ("batch_id",))
         return upserted
@@ -117,11 +110,9 @@ class StreamingRollup:
         folded = self.rollup().withColumn(
             "batch_id", F.lit(_COMPACTED).cast("long")
         )
-        rows = folded.persist()
-        n = rows.count()
-        self.partials.overwrite(rows.select("bucket", "n_rows", "total_cents", "batch_id"))
-        rows.unpersist()
-        return n
+        return self.partials.overwrite(
+            folded.select("bucket", "n_rows", "total_cents", "batch_id")
+        )
 
     def attach(self, stream: DataFrame, checkpoint: str):
         return (

@@ -177,7 +177,7 @@ class StreamingScd2:
         upsert = new_rows.unionByName(closings)
         if upsert.isEmpty():
             return 0
-        return merge_into(self.table, upsert, (self.key, "valid_from"))
+        return merge_into(self.table, upsert, (self.key, "valid_from"))["upserted"]
 
     # ------------------------------------------------------------------
     def attach(self, stream: DataFrame, checkpoint: str):

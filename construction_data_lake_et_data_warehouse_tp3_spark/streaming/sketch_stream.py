@@ -65,11 +65,7 @@ class StreamingCardinality:
                 .groupBy(self.group)
                 .agg(*[F.min(f"m{j}").alias(f"m{j}") for j in range(KMV_K)])
             )
-        folded = fresh.persist()
-        n = folded.count()
-        self.store.overwrite(folded)
-        folded.unpersist()
-        return n
+        return self.store.overwrite(fresh)
 
     # ------------------------------------------------------------------
     def estimates(self) -> DataFrame:

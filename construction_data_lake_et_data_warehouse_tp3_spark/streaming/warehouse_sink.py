@@ -18,6 +18,12 @@ from pyspark.sql import functions as F
 from ..warehouse.merge import ParquetTable, merge_into
 
 
+def batch_applied(ledger: ParquetTable, batch_id: int) -> bool:
+    """True once `batch_id` is in a store's applied-batch ledger: the
+    replay guard of the stores whose partials are sums."""
+    return ledger.exists() and not ledger.read().where(F.col("batch_id") == batch_id).isEmpty()
+
+
 def stream_to_warehouse(
     stream: DataFrame,
     table: ParquetTable,

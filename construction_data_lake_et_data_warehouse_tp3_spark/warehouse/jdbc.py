@@ -8,7 +8,7 @@ upserts). `JdbcTable` implements the same three-method table protocol as
 every sync_* function — runs IDENTICALLY against a JDBC database:
 
     kept   = jdbc-read target LEFT ANTI updates ON keys
-    result = kept UNION updates          → persisted → jdbc overwrite
+    result = kept UNION updates          → parquet staging → jdbc overwrite
 
 Upsert semantics live in merge_into, not in engine-specific
 `ON DUPLICATE KEY UPDATE` SQL, which keeps the path portable to any
@@ -18,13 +18,15 @@ Scale notes: reads partition on a numeric column when the caller passes
 `partition_column` (otherwise single-connection — correct, small dim/fact
 tables); writes batch through executors with `batchsize`. The
 read-before-truncate hazard (JDBC overwrite truncates while the lazy
-read still needs the rows) is closed by persisting + materializing the
-merge result BEFORE the overwrite starts.
+read still needs the rows) is closed by staging the merge result to
+parquet BEFORE the overwrite starts.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..lake.observe import counted
 
 #: CREATE TABLE statements mirroring the reference warehouse schema
 #: (sync_to_mysql.py:133-232): same table names, columns, and key
@@ -172,8 +174,9 @@ class JdbcTable:
                 )
         return reader.jdbc(self.url, self.table, properties=self.properties)
 
-    def overwrite(self, df: DataFrame) -> None:
-        """Stage durably, then truncate-overwrite: the merge result is
+    def overwrite(self, df: DataFrame) -> int:
+        """Stage durably, then truncate-overwrite; returns the rows the
+        staging write counted as it wrote them. The merge result is
         derived from read() of this same table, and JDBC overwrite
         truncates the source the lazy plan still needs. A block-cache
         persist() is NOT enough — losing cached blocks mid-write would
@@ -187,7 +190,8 @@ class JdbcTable:
 
         staging = tempfile.mkdtemp(prefix="tp3_jdbc_stage_")
         try:
-            df.write.mode("overwrite").parquet(staging)
+            out, obs = counted(df)
+            out.write.mode("overwrite").parquet(staging)
             staged = self.spark.read.parquet(staging)
             (
                 staged.write.mode("overwrite")
@@ -196,3 +200,4 @@ class JdbcTable:
             )
         finally:
             shutil.rmtree(staging, ignore_errors=True)
+        return obs.get["records"]

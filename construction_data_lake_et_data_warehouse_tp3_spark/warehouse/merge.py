@@ -4,10 +4,11 @@
 The reference upserts row-by-row over the network — one
 `INSERT … ON DUPLICATE KEY UPDATE` per DataFrame row
 (/root/reference/sync_to_mysql.py:133-232, iterrows at :237,263,287,304).
-Here a MERGE is one distributed job:
+Here a MERGE of a change set (upserts plus delete keys) is one
+distributed write job:
 
-    kept   = target LEFT ANTI updates ON keys     (rows not being updated)
-    result = kept UNION updates                   (updated + inserted rows)
+    kept   = target LEFT ANTI (upsert keys ∪ delete keys) ON keys
+    result = kept UNION (upserts LEFT ANTI delete keys)
 
 committed as the table's next snapshot through the lake's transaction
 log (lake/transaction.py): the new state is staged in a fresh directory
@@ -17,8 +18,11 @@ are replaced wholesale, exactly like the reference's ON-DUPLICATE column
 lists which update every non-key column (+ updated_at).
 
 Scale notes:
-- The anti-join shuffles on the merge keys only; with a small updates
-  side Spark broadcasts it and the target scan never shuffles.
+- One rewrite per change set: upserts and deletes land in the same
+  snapshot, and the upserted and deleted counts are Observations on
+  that write job — no job runs only to count.
+- The anti-joins shuffle on the merge keys only; with a small change
+  set Spark broadcasts it and the target scan never shuffles.
 - Rewrite cost is O(target) per merge — the plain-parquet trade-off. At
   100 TB you partition the target (e.g. by snapshot_date) so a commit
   rewrites only affected partitions, or list data files in the manifest
@@ -33,7 +37,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -41,6 +45,7 @@ from ..lake.transaction import Lakehouse
 
 #: a ParquetTable's name inside its own Lakehouse
 _TABLE = "data"
+_OP = "__merge_op"  # merge_into's row tag: "upsert", "delete" or null (kept)
 
 
 class ParquetTable:
@@ -64,14 +69,17 @@ class ParquetTable:
     def read(self) -> DataFrame:
         return self.lakehouse.read(_TABLE)
 
-    def overwrite(self, df: DataFrame) -> None:
+    def overwrite(self, df: DataFrame) -> int:
         """Commit df as the table's next snapshot, then delete the state
         it replaced (staging of crashed writers is kept for vacuum's
-        default crash window)."""
+        default crash window); returns the rows the write job wrote. A
+        caller that reads df again afterwards must persist it first: df
+        may read the snapshot the vacuum deletes."""
         txn = self.lakehouse.begin()
-        txn.write(_TABLE, df)
+        written = txn.write(_TABLE, df)
         txn.commit()
         self.lakehouse.vacuum(keep_snapshots=1)
+        return written
 
 
 def dedupe_updates(
@@ -104,27 +112,30 @@ def merge_into(
     keys: Sequence[str],
     order_by: str | None = None,
     stamp_updated_at: bool = True,
-) -> int:
-    """MERGE updates into table on keys; returns number of upserted rows.
+    deletes: DataFrame | None = None,
+) -> dict[str, int]:
+    """MERGE updates into table on keys, and drop the keys of `deletes`
+    (any frame carrying the key columns), in one rewrite; returns
+    {"upserted": n, "deleted": n}. A key in both ends up deleted, and
+    only target rows count as deleted, so a replay deletes 0.
 
     Equivalent to `INSERT … ON DUPLICATE KEY UPDATE <all non-key cols>,
-    updated_at = CURRENT_TIMESTAMP` (sync_to_mysql.py:137-142).
+    updated_at = CURRENT_TIMESTAMP` (sync_to_mysql.py:137-142), plus a
+    `DELETE … WHERE key IN deletes`, in one transaction.
 
     Schema policy: updates may ADD columns (target backfills null) but may
     not DROP columns the target has — that's schema drift and raises."""
     missing_keys = [k for k in keys if k not in updates.columns]
     if missing_keys:
         raise SchemaMismatchError(f"updates missing merge key columns {missing_keys}")
+    upsert_keys = updates.select(*keys)
     updates = dedupe_updates(updates, keys, order_by)
     if stamp_updated_at:
         updates = updates.withColumn("updated_at", F.current_timestamp())
-    # the updates subtree (often a full aggregation pipeline) is consumed
-    # twice — the row count and the result write; persist so it computes
-    # once. current_timestamp is also frozen by this, so every written row
-    # carries one stamp per merge. Keep a dedicated handle: the
-    # updated_at-carry branch below REBINDS `updates`, and unpersisting
-    # the rebound frame would leak the cached one for the session.
-    updates = persisted = updates.persist()
+    if deletes is not None:  # a key in both is deleted
+        deletes = deletes.select(*keys)
+        upsert_keys = upsert_keys.join(deletes, list(keys), "left_anti")
+        updates = updates.join(deletes, list(keys), "left_anti")
 
     if table.exists():
         target = table.read()
@@ -155,16 +166,22 @@ def merge_into(
             )
         # no broadcast hint: micro-batch updates auto-broadcast under the
         # session threshold, backfill-sized updates fall back to shuffle
-        kept = target.select(*updates.columns).join(
-            updates.select(*keys), list(keys), "left_anti"
-        )
-        result = kept.unionByName(updates)
+        kept = target.select(*updates.columns).join(upsert_keys, list(keys), "left_anti")
+        if deletes is None:
+            kept = kept.withColumn(_OP, F.lit(None).cast("string"))
+        else:  # rows of deleted keys are tagged, counted, then dropped;
+            # one tag per key, or a key listed twice would double its row
+            tags = deletes.distinct().withColumn(_OP, F.lit("delete"))
+            kept = kept.join(tags, list(keys), "left")
+        rows = kept.unionByName(updates.withColumn(_OP, F.lit("upsert")))
     else:
-        result = updates
+        rows = updates.withColumn(_OP, F.lit("upsert"))
 
-    try:
-        n = updates.count()
-        table.overwrite(result)
-    finally:
-        persisted.unpersist()
-    return n
+    obs = Observation()  # over the union: AQE drops a join it finds empty
+    rows = rows.observe(
+        obs,
+        F.count_if(F.col(_OP) == "upsert").alias("upserted"),
+        F.count_if(F.col(_OP) == "delete").alias("deleted"),
+    )
+    table.overwrite(rows.where(~F.col(_OP).eqNullSafe("delete")).drop(_OP))
+    return obs.get

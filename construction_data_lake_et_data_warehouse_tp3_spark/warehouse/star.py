@@ -112,7 +112,7 @@ def sync_user_summary(
     dim = summary.select(
         "user_id", "user_name", "user_email", "user_country", "user_city"
     ).dropDuplicates(["user_id"])
-    n_dim = merge_into(wh.table("dim_users"), dim, WAREHOUSE_TABLES["dim_users"])
+    n_dim = merge_into(wh.table("dim_users"), dim, WAREHOUSE_TABLES["dim_users"])["upserted"]
 
     fact_name = (
         "fact_user_transaction_summary_eur" if eur else "fact_user_transaction_summary"
@@ -125,7 +125,7 @@ def sync_user_summary(
               "avg_amount", "min_amount", "max_amount", "last_transaction_date"]
     )
     fact = _tag(summary.select(*fact_cols), snapshot_version)
-    n_fact = merge_into(wh.table(fact_name), fact, WAREHOUSE_TABLES[fact_name])
+    n_fact = merge_into(wh.table(fact_name), fact, WAREHOUSE_TABLES[fact_name])["upserted"]
     return {"dim_users": n_dim, fact_name: n_fact}
 
 
@@ -136,7 +136,7 @@ def sync_payment_totals(
     anti-join miss set is returned to the caller by check_fk_misses()."""
     n_dim = merge_into(
         wh.table("dim_payment_methods"), dim, WAREHOUSE_TABLES["dim_payment_methods"]
-    )
+    )["upserted"]
     fact = _tag(
         totals.join(F.broadcast(dim), "payment_method_name").select(
             "payment_method_id",
@@ -151,7 +151,7 @@ def sync_payment_totals(
         wh.table("fact_payment_method_totals"),
         fact,
         WAREHOUSE_TABLES["fact_payment_method_totals"],
-    )
+    )["upserted"]
     return {"dim_payment_methods": n_dim, "fact_payment_method_totals": n_fact}
 
 
@@ -176,7 +176,7 @@ def sync_product_counts(
         wh.table("fact_product_purchase_counts"),
         fact,
         WAREHOUSE_TABLES["fact_product_purchase_counts"],
-    )
+    )["upserted"]
     return {"fact_product_purchase_counts": n}
 
 

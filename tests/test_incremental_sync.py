@@ -5,12 +5,13 @@ replacing the reference's full re-sync)."""
 
 from __future__ import annotations
 
+import uuid
+
 from construction_data_lake_et_data_warehouse_tp3_spark.lake.transaction import (
     Lakehouse,
 )
 from construction_data_lake_et_data_warehouse_tp3_spark.warehouse.incremental import (
     apply_changes,
-    delete_keys,
 )
 from construction_data_lake_et_data_warehouse_tp3_spark.warehouse.merge import (
     ParquetTable,
@@ -79,11 +80,65 @@ class TestIncrementalSync:
         }
         assert _rows(target) == before
 
-    def test_delete_keys_missing_table_and_absent_keys(self, spark, tmp_path):
+    def test_merge_deletes_missing_table_and_absent_keys(self, spark, tmp_path):
         absent = ParquetTable(spark, str(tmp_path / "nope"))
         some = _df(spark, [(1, "a", 1)])
-        assert delete_keys(absent, some, KEYS) == 0
+        none = some.limit(0)
+        assert merge_into(absent, none, KEYS, deletes=some)["deleted"] == 0
         target = ParquetTable(spark, str(tmp_path / "wh"))
         merge_into(target, _df(spark, [(5, "e", 5)]), KEYS)
-        assert delete_keys(target, some, KEYS) == 0  # key 1 not present
+        out = merge_into(target, none, KEYS, deletes=some)  # key 1 not present
+        assert out == {"upserted": 0, "deleted": 0}
         assert _rows(target) == [(5, "e", 5)]
+
+    def test_apply_changes_commits_the_target_once(self, spark, tmp_path):
+        """Upserts and deletes of one interval land in ONE snapshot: one
+        `_txn_log` manifest, where an upsert pass followed by a delete
+        pass commits two."""
+        lh, s1, s2 = _snapshots(spark, tmp_path)
+        target = ParquetTable(spark, str(tmp_path / "wh"))
+        merge_into(target, lh.read("facts", s1), KEYS)
+        before = target.lakehouse.latest_snapshot()
+        out = apply_changes(lh, "facts", target, KEYS, s1, s2)
+        assert out == {"upserted": 2, "deleted": 1}
+        assert target.lakehouse.latest_snapshot() == before + 1
+
+    def test_apply_changes_runs_no_count_job(self, spark, tmp_path):
+        """apply_changes' Spark jobs are the emptiness guard and the write,
+        with the schema reads and the query stages and broadcasts those
+        two plan (named after the thread that runs them): the counts ride
+        the write job, so no job is a count()."""
+        lh, s1, s2 = _snapshots(spark, tmp_path)
+        target = ParquetTable(spark, str(tmp_path / "wh"))
+        merge_into(target, lh.read("facts", s1), KEYS)
+        sc = spark.sparkContext
+        group = f"test-apply-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            apply_changes(lh, "facts", target, KEYS, s1, s2)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        stages = [
+            tracker.getStageInfo(stage)
+            for job in tracker.getJobIdsForGroup(group)
+            for stage in tracker.getJobInfo(job).stageIds
+        ]
+        # a stage a job reuses (skipped) is the first the status store
+        # evicts in a long session: only stages that ran are named
+        calls = {info.name.split(" at ")[0] for info in stages if info is not None}
+        actions = {c for c in calls if not c.startswith("$anonfun")}
+        assert actions == {"isEmpty", "parquet"}, calls
+
+    def test_key_in_upserts_and_deletes_ends_up_deleted(self, spark, tmp_path):
+        """The delete wins, as it did when deletes ran after the upserts."""
+        target = ParquetTable(spark, str(tmp_path / "wh"))
+        merge_into(target, _df(spark, [(1, "a", 1), (2, "b", 2)]), KEYS)
+        out = merge_into(
+            target,
+            _df(spark, [(2, "b2", 20), (3, "c", 3)]),
+            KEYS,
+            deletes=_df(spark, [(2, "b", 2), (3, "c", 3), (9, "z", 9)]),
+        )
+        assert out == {"upserted": 0, "deleted": 1}
+        assert _rows(target) == [(1, "a", 1)]

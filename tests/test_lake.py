@@ -113,6 +113,16 @@ class TestWriter:
         # append again → metadata merges the same partition entry (#25)
         writer.export_stream(df, config)
         assert writer.read_stream_feed(config).count() == 20
+        import json
+
+        with open(writer._metadata_path(config)) as fh:
+            assert json.load(fh)["total_records"] == 20
+        # an event-time export files its stats under the day partitions
+        # it wrote, which exist on disk
+        events = catalog.add(stream_cfg("ev_stream"))
+        stamped = df.selectExpr("id", "TIMESTAMP'2024-03-01 10:00:00' AS ts")
+        meta = writer.export_stream(stamped, events, event_time_col="ts")
+        assert meta["size_mb"] > 0
 
     def test_disabled_and_empty_guards(self, spark, catalog):
         config = catalog.add(stream_cfg())

@@ -67,6 +67,21 @@ class TestSnapshots:
         assert lh.read("fact", s2).collect()[0].v == "f0"
         assert set(lh.tables(s2)) == {"dim", "fact"}
 
+    def test_resolved_paths_have_plain_leaf_names(self, spark, tmp_path):
+        """Readers are handed `…/_txn_<id>_<seq>/data`: Spark takes a path
+        whose own name starts with `_` or `.` for hidden and warns."""
+        lh = Lakehouse(spark, str(tmp_path / "lh"))
+        for rows in ([(1, "a")], [(2, "b")]):
+            txn = lh.begin()
+            txn.write("dim", _df(spark, rows))
+            txn.write("fact", _df(spark, rows))
+            txn.commit()
+        paths = lh.tables()
+        assert set(paths) == {"dim", "fact"}
+        for path in paths.values():
+            assert not os.path.basename(path).startswith(("_", "."))
+            assert os.path.basename(os.path.dirname(path)).startswith("_txn_")
+
     def test_concurrent_commits_take_distinct_snapshots(self, spark, tmp_path):
         lh = Lakehouse(spark, str(tmp_path / "lh"))
         a, b = lh.begin(), lh.begin()
@@ -148,6 +163,35 @@ class TestVacuum:
         assert lh.read("fact").collect()[0].v == "f0"
         latest = lh.latest_snapshot()
         assert lh.read("dim", latest - 1).collect()[0].v == "v2"
+
+    def test_vacuum_keeps_live_snapshots_of_both_layouts(self, spark, tmp_path):
+        """A manifest written before staging gained its `data` leaf still
+        resolves, and vacuum compares live state by `_txn_` directory, so
+        it deletes neither that directory nor a live `…/data`."""
+        import json
+
+        root = str(tmp_path / "lh")
+        legacy = os.path.join("tables", "fact", "_txn_0123456789ab_1")
+        _df(spark, [(10, "f0")]).write.parquet(os.path.join(root, legacy))
+        os.makedirs(os.path.join(root, "_txn_log"))
+        with open(os.path.join(root, "_txn_log", "1.json"), "w") as fh:
+            json.dump({"snapshot": 1, "txn_id": "0123456789ab",
+                       "tables": {"fact": legacy}, "records": {"fact": 1}}, fh)
+        lh = Lakehouse(spark, root)
+        for v in ("v1", "v2"):
+            t = lh.begin()
+            t.write("dim", _df(spark, [(1, v)]))
+            t.commit()
+        removed = lh.vacuum(keep_snapshots=1, min_txn_age_seconds=0.0)
+        # only dim's superseded v1 goes
+        assert [os.path.basename(os.path.dirname(p)) for p in removed] == ["dim"]
+        assert lh.read("fact").collect()[0].v == "f0"
+        assert lh.read("dim").collect()[0].v == "v2"
+        staged_left = glob.glob(os.path.join(root, "tables", "*", "_txn_*"))
+        assert sorted(staged_left) == sorted(
+            os.path.dirname(p) if p.endswith("data") else p
+            for p in lh.tables().values()
+        )
 
     def test_vacuum_protects_in_flight_txn(self, spark, tmp_path):
         """A concurrent vacuum must NOT delete the staging of a live

@@ -145,7 +145,7 @@ class TestCrashSafety:
         _overwrite(spark, table, LATER)
         table.lakehouse.vacuum(min_txn_age_seconds=0)
         assert _rows(table) == LATER
-        assert _staged(table) == [table.path]
+        assert _staged(table) == [os.path.dirname(table.path)]
 
     def test_crash_at_every_rename_leaves_table_readable(
         self, spark, tmp_path, monkeypatch
