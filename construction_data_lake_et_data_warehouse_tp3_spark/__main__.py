@@ -8,8 +8,6 @@ unified (`python -m construction_data_lake_et_data_warehouse_tp3_spark <cmd>`):
   permissions grant|list                          ≙ permissions_manager.py
   generate --topic --messages                     ≙ kafka_producer.py
   curate --input --store [--eval-shingles]        (continuous manifest)
-  ann build|query|publish --name [--k --nprobe]   (persisted IVF index)
-  bench                                           (bench.py passthrough)
 
 One SparkSession per invocation; feeds live under --lake-root (default
 $SPARK_GRAFT_LAKE or /tmp/tp3_lake). The reference's subprocess-based
@@ -312,55 +310,6 @@ def cmd_curate(args) -> int:
     return 0
 
 
-def cmd_ann(args) -> int:
-    """Persisted ANN index ops: `ann build` fits the IVF coarse quantizer
-    on (vec_id, embedding) rows and stores centroids+postings as new
-    committed versions under the lake root; `ann query` probes the stored
-    index (any later session, no refit) for (query_id|vec_id, embedding)
-    rows. Completes the fit-once / probe-forever shape the batch
-    ivf_kmeans_topk (refit per run) and the in-memory streaming index
-    lack."""
-    from pyspark.sql import functions as F
-
-    from .lake.ann import AnnIndex
-    from .sources.registry import load_table
-
-    spark = _spark()
-    if args.input:
-        df = spark.read.parquet(args.input)
-    else:
-        df = load_table(spark, args.sf_dir, "embeddings")
-    root = _lake_root(args)
-    if args.action == "build":
-        meta = AnnIndex.build(
-            spark, root, df.select("vec_id", "embedding"), name=args.name
-        )
-        print(json.dumps(meta))
-        return 0
-    idx = AnnIndex(spark, root, name=args.name)
-    if args.action == "publish":
-        if not args.stream_store:
-            print("error: ann publish requires --stream-store", file=sys.stderr)
-            return 2
-        from .warehouse.merge import ParquetTable
-
-        postings = ParquetTable(spark, os.path.join(args.stream_store, "vectors")).read()
-        print(json.dumps(idx.publish_postings(postings)))
-        return 0
-    qcol = "query_id" if "query_id" in df.columns else "vec_id"
-    queries = df.select(F.col(qcol).alias("query_id"), "embedding")
-    if args.limit:
-        queries = queries.orderBy("query_id").limit(args.limit)
-    out = idx.topk(queries, k=args.k, nprobe=args.nprobe, version=args.version)
-    if args.out:
-        out.write.mode("overwrite").parquet(args.out)
-        print(json.dumps({"result_rows": out.count(), "out": args.out}))
-    else:
-        for row in out.orderBy("query_id", "rank").collect():
-            print(json.dumps(row.asDict()))
-    return 0
-
-
 def build_parser() -> argparse.ArgumentParser:
     parser = argparse.ArgumentParser(prog="tp3-spark")
     parser.add_argument("--lake-root", default=None)
@@ -445,25 +394,6 @@ def build_parser() -> argparse.ArgumentParser:
     check.add_argument("--expect", action="append", default=[], metavar="NAME=PREDICATE")
     check.add_argument("--on-violation", choices=["fail", "count"], default="fail")
     check.set_defaults(fn=cmd_check)
-
-    ann = sub.add_parser(
-        "ann",
-        help="persisted ANN index: build (fit+store versioned) / query (probe stored)",
-    )
-    ann.add_argument("action", choices=["build", "query", "publish"])
-    ann.add_argument("--stream-store", default=None,
-                     help="publish: StreamingVectorIndex store root to snapshot")
-    ann.add_argument("--input", default=None,
-                     help="parquet of (vec_id|query_id, embedding); default: embeddings table at --sf-dir")
-    ann.add_argument("--sf-dir", default="/root/testdata/sf0.001")
-    ann.add_argument("--name", default="ann", help="index name (feed prefix)")
-    ann.add_argument("--k", type=int, default=5)
-    ann.add_argument("--nprobe", type=int, default=2)
-    ann.add_argument("--version", type=int, default=None,
-                     help="probe a specific committed index version (default latest)")
-    ann.add_argument("--limit", type=int, default=None, help="query only the first N ids")
-    ann.add_argument("--out", default=None, help="write results parquet here instead of stdout")
-    ann.set_defaults(fn=cmd_ann)
 
     curate = sub.add_parser(
         "curate",

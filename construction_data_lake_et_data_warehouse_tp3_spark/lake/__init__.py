@@ -1,4 +1,3 @@
 from .catalog import FeedCatalog, FeedConfig, FeedType, PartitioningType, StorageMode  # noqa: F401
 from .retention import apply_stream_retention, apply_version_retention  # noqa: F401
 from .writer import DataLakeWriter  # noqa: F401
-from .ann import AnnIndex  # noqa: F401

@@ -6,9 +6,9 @@ Reference behaviors re-expressed Spark-first:
   data_lake_config.py:141-143) → `partitionBy("year","month","day")`
   with mode=append; Spark discovers the Hive-style dirs natively.
 - version-partitioned snapshot (export_to_data_lake.py:160-212,
-  version scan :235-245) → literal `version=vN` partition column with
-  dynamic partition overwrite; N auto-increments from the directory
-  listing exactly like `_get_next_version`.
+  version scan :235-245) → literal `version=vN` partition column; every
+  export claims N through the feed's `_commit_log`, one past any
+  claimed, committed or on-disk version (`_get_next_version`).
 - `_metadata.json` running stats (export_to_data_lake.py:277-328) →
   per-partition record/size stats read from the committed files, so an
   append adds to its partition's entry; the batch's own row count and
@@ -184,34 +184,18 @@ class DataLakeWriter:
             )
         os.rename(tmp, os.path.join(log_dir, f"v{n}.commit"))  # atomic publish
 
-    def export_table(
-        self,
-        df: DataFrame,
-        config: FeedConfig,
-        version: int | None = None,
-        partition_cols: tuple[str, ...] | None = None,
-    ) -> dict:
+    def export_table(self, df: DataFrame, config: FeedConfig) -> dict:
         """Write a full snapshot under version=v<N> (claimed through the
         commit log), then purge versions beyond keep_versions (export
-        post-export cleanup, export_to_data_lake.py:204-206).
-
-        ``partition_cols`` lays the snapshot out as key=value directories
-        INSIDE the version dir (e.g. the ANN postings partitionBy("cid"))
-        so readers filtering on those columns prune whole files at
-        planning time; versioning, commit-log atomicity, and retention
-        are unchanged — the partitioning is a layout detail of one
-        committed version."""
+        post-export cleanup, export_to_data_lake.py:204-206)."""
         if not config.enabled:
             return {"skipped": "disabled"}
         if df.isEmpty():
             return {"skipped": "empty"}
-        n = version if version is not None else self.claim_version(config)
+        n = self.claim_version(config)
         path = os.path.join(self.catalog.feed_data_path(config), f"version=v{n}")
         out, obs = counted(df)
-        writer = out.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(path)
+        out.write.mode("overwrite").parquet(path)
         meta = self._update_metadata(config, [f"version=v{n}"], obs.get["records"])
         self._commit_version(config, n, meta["records"])
         if config.keep_versions:

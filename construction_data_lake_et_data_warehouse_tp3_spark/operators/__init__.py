@@ -32,10 +32,8 @@ _MODULES = (
     "pipelines",
     "python_udfs",
     "quality",
-    "clustering",
     "graph",
     "statistics",
-    "retrieval",
     "sketches",
     "profiling",
 )
@@ -68,14 +66,12 @@ _DRIVER_PRIORITY = (
     "ab_test_zscore",
     "arrow_doc_stats",
     "benford_first_digit",
-    "bm25_search",
     "bootstrap_revenue_ci",
     "cohort_ltv",
     "cumulative_unique_users",
     "cusum_changepoint",
     "daily_value_percentiles",
     "degree_assortativity",
-    "embedding_drift",
     "event_path_trigrams",
     "ewma_daily_revenue",
     "item_similarity_topk",
@@ -94,12 +90,9 @@ _DRIVER_PRIORITY = (
     "quantity_discount_corr",
     "revenue_gini",
     "revenue_trend_slope",
-    "rrf_hybrid_search",
     "seasonal_decomposition",
     "seasonal_naive_backtest",
-    "semdedup_pairs",
     "session_bounce_rate",
-    "shingle_containment_pairs",
     "source_lang_entropy",
     "status_priority_mi",
     "suspect_duplicate_orders",
@@ -131,10 +124,8 @@ _DRIVER_PRIORITY = (
     "feature_hashing",
     "interpolate_daily_revenue",
     "inverted_index",
-    "jl_projection",
     "kcore_products",
     "kruskal_wallis_priority",
-    "label_centroids",
     "lang_id_confusion",
     "median_order_value",
     "median_order_value_approx_check",
@@ -144,7 +135,6 @@ _DRIVER_PRIORITY = (
     "ppjoin_jaccard_pairs",
     "product_purchase_counts_approx_check",
     "quantile_sketch_check",
-    "quantize_embeddings",
     "retention_cohorts",
     "revenue_acf",
     "revenue_anomalies",
@@ -161,7 +151,6 @@ _DRIVER_PRIORITY = (
     "y4m_video_stats",
     "above_avg_orders",
     "amount_bucket_histogram",
-    "ann_index_recall_check",
     "ann_ivf_topk",
     "anonymize_stream",
     "apply_in_pandas_group_stats",
@@ -215,8 +204,6 @@ _DRIVER_PRIORITY = (
     "edit_distance_pairs",
     "event_sessions",
     "hopping_window_events",
-    "ivf_kmeans_topk",
-    "kmeans_embeddings",
     "lm_surprisal",
     "minhash_lsh_candidates",
     "pagerank_products",

@@ -217,21 +217,21 @@ def _qualifying_buckets(bands: DataFrame) -> DataFrame:
     buffer and only then dropped the oversized ones — on closed-vocab
     corpora where non-discriminative signatures produce huge buckets,
     that pre-cap materialization was the measured cause of the xxhash64
-    twins' third-decade blowup (slope3 44.1 / 26.2 on the 5M-doc tier,
-    SCALE_r11.json). Now: count per (band, sig) with an O(1) agg buffer,
+    twins' third-decade blowup (slope3 44.1 / 26.2 on the 5M-doc
+    tier). Now: count per (band, sig) with an O(1) agg buffer,
     keep 2..CAP keys, left-semi the band rows back, and collect_list
     only over buckets already known to be capped — the agg buffer is
     bounded by CAP regardless of corpus shape.
 
     The count is a window over the SAME (band, sig) exchange the
-    collect_list needs anyway (the shingle_containment_pairs idiom), so
-    the minhash fold runs exactly ONCE — a count→cap-filter→semi-join
-    rewrite was measured 1.9× slower at the 100x tier because the
-    broadcast semi-join split the lineage and re-ran the fold on both
-    sides. WindowExec buffers one group at a time in a SPILLABLE row
-    buffer (tiny (doc_id, band, sig) rows hit disk, not heap), versus
-    ObjectHashAggregate holding every group's growing array on-heap at
-    once — degenerate buckets cost bounded memory and linear I/O."""
+    collect_list needs anyway, so the minhash fold runs exactly ONCE — a
+    count→cap-filter→semi-join rewrite was measured 1.9× slower at the
+    100x tier because the broadcast semi-join split the lineage and
+    re-ran the fold on both sides. WindowExec buffers one group at a
+    time in a SPILLABLE row buffer (tiny (doc_id, band, sig) rows hit
+    disk, not heap), versus ObjectHashAggregate holding every group's
+    growing array on-heap at once — degenerate buckets cost bounded
+    memory and linear I/O."""
     w = Window.partitionBy("band", "sig")
     return (
         bands.withColumn("n", F.count(F.lit(1)).over(w))
@@ -582,8 +582,8 @@ def jaccard_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The registry's `ppjoin_jaccard_pairs` stays the always-exact form so
     the brute-force oracle proves candidate completeness every round;
-    this router is the deployment shape bench.py and tools/scale_tier.py
-    time.
+    this router is the deployment shape for corpora too large for the
+    exact form.
 
     The ordered shingle index is built ONCE and localCheckpointed —
     the probe's collect, the exact route's prefix+verify, and the

@@ -1,11 +1,10 @@
 """Graph analytics over the relational tables — PageRank on the product
-co-purchase graph (parts bought together in one order), the second
-iterative-algorithm family beside clustering.py's k-means (the reference
-has no graph surface; its nearest analog is the FK lookup joins,
-sync_to_mysql.py:236-282).
+co-purchase graph (parts bought together in one order), the engine's
+iterative-algorithm family (the reference has no graph surface; its
+nearest analog is the FK lookup joins, sync_to_mysql.py:236-282).
 
-Exactness discipline (same as k-means): ranks live in INTEGER micro-units
-and every update is integer arithmetic — contributions are rank DIV
+Exactness discipline: ranks live in INTEGER micro-units and every
+update is integer arithmetic — contributions are rank DIV
 out_degree, damping is (15·base + 85·Σcontrib) DIV 100 — so the unrolled
 DuckDB oracle reproduces the Spark loop bit-for-bit (floor division on
 non-negative ints is engine-independent; no float summation order
@@ -311,7 +310,7 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: test SF (sf0.001: 200→185→177→169; sf0.01: 2000→1972→1971→1971) so
 #: the iteration is genuinely exercised, never degenerate-empty or
 #: all-survive. Bounded rounds (not run-to-fixpoint) keep the oracle an
-#: unrolled CTE and the Spark loop a fixed-depth plan — the kmeans /
+#: unrolled CTE and the Spark loop a fixed-depth plan — the
 #: pagerank discipline; production peeling iterates to convergence with
 #: the same per-round shape.
 K_CORE = 70
@@ -340,10 +339,9 @@ def kcore_products(
     final degree pass consume `edges`, and without the checkpoint each
     of those rounds+1 jobs re-derives the co-purchase BUILD (lineitem
     self-join + distinct — the dominant cost) from scratch. Measured at
-    the 10x tier (tools/scale_tier.py, 6.1M lineitem rows) this is the
-    difference between a 4.05x and a ~2x decade slope: the peel rounds
-    themselves are bounded by the shrinking subgraph, the rebuilds were
-    not.
+    the 10x tier (6.1M lineitem rows) this is the difference between a
+    4.05x and a ~2x decade slope: the peel rounds themselves are bounded
+    by the shrinking subgraph, the rebuilds were not.
 
     r9 (100x tier): the peel runs on the CANONICAL half (src < dst),
     not the mirrored directed set — induced degree is counted by

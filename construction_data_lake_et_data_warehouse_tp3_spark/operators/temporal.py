@@ -417,9 +417,8 @@ def revenue_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64 on large corpora, and a distributed double sum is
     addition-order dependent — so μ and σ² fold SEQUENTIALLY over the
     COLLECTED sorted daily-cents array (≈|days| values, trivially
-    driver-side-free but single-row), the same fixed-order trick the
-    k-means distance folds use. Both engines fold the identical sorted
-    list, so every double is bit-identical; the only comparison is
+    driver-side-free but single-row). Both engines fold the identical
+    sorted list, so every double is bit-identical; the only comparison is
     |x−μ| > k·σ with those shared values, and no rounding call exists
     anywhere."""
     orders = load_table(spark, sf_dir, "orders")

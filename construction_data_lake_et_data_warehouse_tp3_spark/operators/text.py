@@ -427,7 +427,7 @@ def feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: map-only — per doc the vector is one expression
     (transform over the bin range counting matching tokens); a single
-    scan, ZERO exchanges (the jl_projection contract).  Per-row cost is
+    scan, ZERO exchanges.  Per-row cost is
     HASH_BINS passes over the token array; for very long docs flip to
     explode + groupBy(doc, bin) and pay the shuffle instead."""
     docs = load_table(spark, sf_dir, "documents")

@@ -1,6 +1,6 @@
 """TPC-H-style headline queries over the driver testdata star schema.
 
-These are the bench workload (bench.py) and the broadest correctness
+These are the headline workload and the broadest correctness
 surface: multi-join + filter + aggregate + top-k plans whose shapes match
 all 22 published TPC-H queries — adapted to the columns and values
 actually present: nation names are NATION_N, p_type values are

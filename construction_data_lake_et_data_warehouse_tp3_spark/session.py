@@ -21,11 +21,11 @@ def _builder_conf() -> dict[str, str]:
     """Confs that must be set before the JVM starts (builder-time only).
 
     Read at CALL time, not import time: a tool that sets
-    ``SPARK_GRAFT_DRIVER_MEM`` after importing the package — e.g.
-    tools/scale_tier.py defaulting its sweep to the documented 64g heap
-    — must still win. A module-level dict froze whatever the env held at
-    first import (16g), and the 100x kcore sweep OOMed under a heap the
-    caller believed it had raised."""
+    ``SPARK_GRAFT_DRIVER_MEM`` after importing the package — e.g. a
+    large-scale sweep raising it to a 64g heap — must still win. A
+    module-level dict froze whatever the env held at first import (16g),
+    and the 100x kcore sweep OOMed under a heap the caller believed it
+    had raised."""
     return {
         # overridable for scale-tier sweeps: the 100x tier (61M-row edge
         # sets in one JVM) needs more than the 16g default the driver-scale

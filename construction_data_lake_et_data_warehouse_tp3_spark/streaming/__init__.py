@@ -1,4 +1,3 @@
-from .ann_stream import StreamingVectorIndex  # noqa: F401
 from .anomaly_stream import StreamingAnomalyMonitor, train_baseline  # noqa: F401
 from .dedup_stream import StreamingDeduper  # noqa: F401
 from .ingest import (  # noqa: F401

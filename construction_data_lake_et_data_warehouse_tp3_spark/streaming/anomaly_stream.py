@@ -1,7 +1,6 @@
 """Streaming anomaly monitor — the streaming twin of the batch z-score
 detector (operators/temporal.revenue_anomalies), completing the pattern
-of streaming twins for the batch analytics surface (dedup_stream /
-ann_stream).
+of streaming twins for the batch analytics surface (dedup_stream).
 
 A monitoring pipeline trains its baseline offline (μ/σ of the metric
 over history) and then scores live records continuously, landing

@@ -5,7 +5,7 @@ operators/pipelines.cms_heavy_hitters).
 
 CMS cells are SUMS, so unlike the min-monoid sketches a replayed batch
 WOULD double-count — this maintainer therefore uses the partials+ledger
-discipline (index_stream/rollup_stream): per-batch cell increments MERGE
+discipline (rollup_stream): per-batch cell increments MERGE
 keyed (d, bucket, batch_id) and an applied-batch ledger short-circuits
 replays; estimates fold the partials at read time, and compact() folds
 history into one sentinel row per cell so state stays at the grid size

@@ -1,8 +1,8 @@
 """Streaming SCD2 maintainer — the streaming twin of the batch type-2
 dimension build (operators/statistics.scd2_user_state_history), in the
-same pattern as the other streaming twins (dedup_stream / ann_stream /
-anomaly_stream): the batch operator
-defines the semantics, foreachBatch + MERGE makes them incremental.
+same pattern as the other streaming twins (dedup_stream /
+anomaly_stream): the batch operator defines the semantics,
+foreachBatch + MERGE makes them incremental.
 
 Each micro-batch of change records (key, ts, state) is folded into a
 persistent history table with [valid_from, valid_to) validity,

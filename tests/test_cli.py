@@ -4,8 +4,6 @@ permissions)."""
 
 from __future__ import annotations
 
-import pytest
-
 from construction_data_lake_et_data_warehouse_tp3_spark.__main__ import main
 
 
@@ -188,64 +186,3 @@ class TestCurateVerb:
         err = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
         assert "frozen" in err["error"]
         assert _json.load(open(frozen_path)) == frozen
-
-
-class TestAnnVerb:
-    def test_build_query_publish_roundtrip(self, spark, tmp_path, capsys):
-        """ann build fits+stores versioned index tables; ann query probes
-        them in a later invocation (no refit); ann publish snapshots a
-        stream store as the next postings version under the stored
-        centroids; publish without centroids is a clean error."""
-        import json as _json
-        import os as _os
-
-        root = str(tmp_path / "lake")
-        assert main([
-            "--lake-root", root, "ann", "build",
-            "--sf-dir", "/root/testdata/sf0.001",
-        ]) == 0
-        meta = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-        assert meta["centroid_version"] == 1 and meta["vectors"] == 500
-
-        assert main([
-            "--lake-root", root, "ann", "query",
-            "--sf-dir", "/root/testdata/sf0.001", "--limit", "2", "--k", "3",
-        ]) == 0
-        rows = [
-            _json.loads(line)
-            for line in capsys.readouterr().out.strip().splitlines()
-        ]
-        assert len(rows) == 6  # 2 queries x k=3
-        assert all(r["rank"] <= 3 for r in rows)
-
-        # maintain a stream store against the STORED quantizer, publish it
-        from construction_data_lake_et_data_warehouse_tp3_spark.lake.ann import (
-            AnnIndex,
-        )
-        from construction_data_lake_et_data_warehouse_tp3_spark.sources.registry import (
-            load_table,
-        )
-        from construction_data_lake_et_data_warehouse_tp3_spark.streaming.ann_stream import (
-            StreamingVectorIndex,
-        )
-
-        idx = AnnIndex(spark, root)
-        sstore = str(tmp_path / "stream")
-        sidx = StreamingVectorIndex(spark, sstore, idx.centroids())
-        emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-        sidx.process_batch(emb.where("vec_id < 100").select("vec_id", "embedding"), 0)
-        assert main([
-            "--lake-root", root, "ann", "publish", "--stream-store", sstore,
-        ]) == 0
-        pub = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-        assert pub["posting_version"] == 2 and pub["vectors"] == 100
-
-        # publish into a lake with no centroids -> clean nonzero exit
-        with pytest.raises(LookupError):
-            main([
-                "--lake-root", str(tmp_path / "empty"), "ann", "publish",
-                "--stream-store", sstore,
-            ])
-        assert main([
-            "--lake-root", root, "ann", "publish",
-        ]) == 2  # missing --stream-store

@@ -45,11 +45,6 @@ TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
 
-#: queries whose timed body builds/destroys heavyweight scratch state
-#: (the persisted ANN index) — covered by the embedding-loader fixes and
-#: their own suite; skipping keeps this sweep's wall bounded.
-SKIP = {"ann_index_recall_check"}
-
 _LOCAL = threading.local()
 
 
@@ -182,8 +177,6 @@ def test_all_queries_match_oracle_on_dirty_corpus(spark, dirty_dir):
     failures = []
 
     def run(name):
-        if name in SKIP:
-            return
         try:
             df = queries[name](spark, dirty_dir)
             srows = [tuple(r) for r in df.collect()]

@@ -25,13 +25,9 @@ import __spark_entry__ as entry_mod
 SF_DIR = "/root/testdata/sf0.001"
 
 #: iterative/trained operators whose DataFrame CONSTRUCTION runs jobs
-#: (k-means training, PageRank localCheckpoints) —
+#: (e.g. PageRank's localCheckpoints) —
 #: linted implicitly by their own tests, skipped here for suite cost.
 _BUILD_TIME_HEAVY = {
-    "ann_index_recall_check",
-    "kmeans_embeddings",
-    "ivf_kmeans_topk",
-    "semdedup_pairs",
     "pagerank_products",
     "triangle_participation",
     "minhash_verified_dups",
@@ -77,16 +73,12 @@ def test_build_time_heavy_plans_lint_at_tiny_shape(spark, monkeypatch):
     """The _BUILD_TIME_HEAVY queries are exactly the heaviest plans —
     the ones where a CartesianProduct or BatchEvalPython would hurt most
     at 100 TB — so they get the SAME mechanical check, just at 1-iteration
-    shape: fixed-iteration training constants (Lloyd rounds, PageRank
-    rounds) are patched to 1 so the build-time jobs stay tiny. Sequential,
-    not pooled: these queries RUN jobs during DataFrame construction, and
-    monkeypatched module constants must be visible to each build."""
-    from construction_data_lake_et_data_warehouse_tp3_spark.operators import (
-        clustering,
-        graph,
-    )
+    shape: the fixed PageRank round count is patched to 1 so the
+    build-time jobs stay tiny. Sequential, not pooled: these queries RUN
+    jobs during DataFrame construction, and the monkeypatched module
+    constant must be visible to each build."""
+    from construction_data_lake_et_data_warehouse_tp3_spark.operators import graph
 
-    monkeypatch.setattr(clustering, "N_ITERS", 1)
     monkeypatch.setattr(graph, "N_ITERS", 1)
 
     queries = entry_mod.queries()
@@ -101,95 +93,28 @@ def test_build_time_heavy_plans_lint_at_tiny_shape(spark, monkeypatch):
     assert not found, found
 
 
-#: bench.py's entry points OUTSIDE the registry (VERDICT r10 ask #4):
-#: the deployment-form twins and the persisted-index probe path were
-#: outside the CartesianProduct/BatchEvalPython net precisely because
-#: the two tests above pin their union to set(queries()). This list is
-#: pinned HERE and cross-checked against bench.py itself below, so a
-#: new benched callable that skips the lint fails the coverage test
-#: instead of silently widening the gap.
-_BENCH_ONLY = (
-    "jaccard_dup_pairs_router",
+#: the dedup deployment forms OUTSIDE the registry: the two tests above
+#: pin their union to set(queries()), so these callables get their own
+#: pass of the same CartesianProduct/BatchEvalPython net.
+_DEPLOYMENT_FORMS = (
+    "jaccard_dup_pairs",
     "edit_distance_pairs_capped",
     "minhash_lsh_candidates_fast",
 )
 
 
-def _bench_module():
-    import importlib.util
-    import os
+def test_bench_only_deployment_forms_lint_clean(spark):
+    """Same mechanical net as the registry lints, for the deployment
+    forms: sequential at sf0.001, because the router form
+    (jaccard_dup_pairs) runs jobs at DataFrame-build time."""
+    from construction_data_lake_et_data_warehouse_tp3_spark.operators import dedup
 
-    path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "bench.py")
-    spec = importlib.util.spec_from_file_location("tp3_bench", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_bench_lint_covers_every_benched_callable():
-    """Every batch callable bench.py times is inside SOME lint net:
-    registry names in the two registry partitions above, bench-only
-    deployment forms in _BENCH_ONLY, and the persisted-index probe in
-    its own test below. The sets are read from bench.py itself, so
-    adding a benched entry point without linting it is a visible diff."""
-    bench = _bench_module()
-    registry = set(entry_mod.queries())
-    benched_registry = (
-        set(bench.HEADLINE) | set(bench.GRAPH_QUERIES) | set(bench.WEDGE_QUERIES)
-    )
-    assert benched_registry <= registry  # covered by the two tests above
-    assert set(bench._deployment_forms()) == set(_BENCH_ONLY)
-    # _bench_ann's probe path is ann_probe_recall -> AnnIndex.topk,
-    # linted by test_bench_ann_probe_plan_lints_clean below; the only
-    # other measured path is the streaming ingest (a writeStream, no
-    # batch plan to lint — its stateful plan is locked by
-    # tests/test_streaming.py's stream==batch parity instead).
-
-
-def test_bench_only_deployment_forms_lint_clean(spark, monkeypatch):
-    """Same mechanical net as the registry lints, for the bench-only
-    lane: sequential at sf0.001 (the router form runs jobs at
-    DataFrame-build time), iteration constants patched tiny exactly like
-    test_build_time_heavy_plans_lint_at_tiny_shape."""
-    from construction_data_lake_et_data_warehouse_tp3_spark.operators import (
-        clustering,
-        graph,
-    )
-
-    monkeypatch.setattr(clustering, "N_ITERS", 1)
-    monkeypatch.setattr(graph, "N_ITERS", 1)
-    forms = _bench_module()._deployment_forms()
     found = []
-    for name in _BENCH_ONLY:
-        df = forms[name](spark, SF_DIR)
+    for name in _DEPLOYMENT_FORMS:
+        df = getattr(dedup, name)(spark, SF_DIR)
         plan = df._jdf.queryExecution().executedPlan().toString()
         if "CartesianProduct" in plan:
             found.append(f"{name}: unbroadcast cross join")
         if "BatchEvalPython" in plan:
             found.append(f"{name}: row-at-a-time Python UDF")
     assert not found, found
-
-
-def test_bench_ann_probe_plan_lints_clean(spark, tmp_path):
-    """The persisted-index probe path bench.py times (_bench_ann ->
-    ann_probe_recall -> AnnIndex.topk with the cid partition pushdown):
-    built once into a scratch root at sf0.001, then the probe plan gets
-    the same CartesianProduct/BatchEvalPython net. The brute-force
-    recall twin inside ann_probe_recall broadcasts its 5-row query side
-    on purpose (BroadcastNestedLoopJoin, not CartesianProduct), so a
-    lost broadcast fails here too."""
-    from construction_data_lake_et_data_warehouse_tp3_spark.lake.ann import AnnIndex
-    from construction_data_lake_et_data_warehouse_tp3_spark.operators.clustering import (
-        ann_probe_recall,
-    )
-    from construction_data_lake_et_data_warehouse_tp3_spark.sources.registry import (
-        load_table,
-    )
-
-    root = str(tmp_path / "ann_lint")
-    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    AnnIndex.build(spark, root, emb)
-    df = ann_probe_recall(spark, SF_DIR, root)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan, "ann probe: unbroadcast cross join"
-    assert "BatchEvalPython" not in plan, "ann probe: row-at-a-time Python UDF"

@@ -118,33 +118,6 @@ class TestR5dPlans:
     def _plan(df) -> str:
         return df._jdf.queryExecution().executedPlan().toString()
 
-    def test_jl_projection_zero_exchange_single_scan(self, spark):
-        from construction_data_lake_et_data_warehouse_tp3_spark.operators.retrieval import (
-            jl_projection,
-        )
-
-        plan = self._plan(jl_projection(spark, SF_DIR))
-        # map-only: no COMPUTED shuffle (the loader's small-input
-        # round-robin repartition is not a keyed exchange)
-        assert plan.count("Exchange hashpartitioning") == 0
-        assert plan.count("Exchange SinglePartition") == 0
-        assert plan.count("Scan parquet") == 1
-
-    def test_bm25_broadcast_stats_and_topk_no_global_sort(self, spark):
-        from construction_data_lake_et_data_warehouse_tp3_spark.operators.retrieval import (
-            bm25_search,
-        )
-
-        plan = self._plan(bm25_search(spark, SF_DIR))
-        # 1-row stats reach the scoring scan via broadcast, never a shuffle
-        assert "BroadcastExchange" in plan or "BroadcastNestedLoop" in plan
-        assert plan.count("Exchange hashpartitioning") == 0
-        # top-k compiles to TakeOrderedAndProject — no global Sort stage
-        assert "TakeOrderedAndProject" in plan
-        # two corpus scans (stats pass + scoring pass) is the contract;
-        # a third means a subtree silently re-expanded
-        assert plan.count("Scan parquet") == 2
-
     def test_novelty_entropy_conversion_shuffle_budget(self, spark):
         from construction_data_lake_et_data_warehouse_tp3_spark.operators.analytics import (
             time_to_conversion,

@@ -175,79 +175,6 @@ class TestTermPmiPairs:
         assert ("always", "common") in pairs  # c_ab = 14
 
 
-class TestRrfHybridSearch:
-    def test_fusion_matches_recomputed_ranks(self, spark):
-        """Differential: rebuild both arms' rank lists independently and
-        recompute the fusion in Python — the operator must agree exactly."""
-        import pyspark.sql.functions as F
-
-        from construction_data_lake_et_data_warehouse_tp3_spark.operators.retrieval import (
-            RRF_K,
-            RRF_POOL,
-            RRF_QUERY_VEC,
-            RRF_TOP_N,
-            bm25_search,
-            rrf_hybrid_search,
-        )
-        from construction_data_lake_et_data_warehouse_tp3_spark.operators.similarity import (
-            _DOT,
-            _vectors,
-        )
-
-        sf = "/root/testdata/sf0.001"
-        lex = [
-            r.doc_id
-            for r in bm25_search(spark, sf)
-            .orderBy(F.desc("score_micro"), "doc_id")
-            .collect()
-        ]
-        vec = _vectors(spark, sf)
-        q = vec.where(F.col("vec_id") == RRF_QUERY_VEC).select(
-            F.col("v").alias("qv"), F.col("norm").alias("qn")
-        )
-        sem = [
-            r.vec_id
-            for r in vec.where(F.col("vec_id") != RRF_QUERY_VEC)
-            .crossJoin(F.broadcast(q))
-            .select(
-                "vec_id",
-                F.round(
-                    F.expr(_DOT.format(a="qv", b="v")) / (F.col("qn") * F.col("norm")),
-                    4,
-                ).alias("c"),
-            )
-            .orderBy(F.desc("c"), "vec_id")
-            .limit(RRF_POOL)
-            .collect()
-        ]
-        expected = {}
-        for rank, d in enumerate(lex, 1):
-            expected[d] = expected.get(d, 0) + 1_000_000 // (RRF_K + rank)
-        for rank, v in enumerate(sem, 1):
-            expected[v] = expected.get(v, 0) + 1_000_000 // (RRF_K + rank)
-        want = sorted(expected.items(), key=lambda kv: (-kv[1], kv[0]))[:RRF_TOP_N]
-        got = [
-            (r.item_id, r.rrf_micro) for r in rrf_hybrid_search(spark, sf).collect()
-        ]
-        assert got == want
-
-    def test_arms_end_in_topk_no_corpus_window(self, spark):
-        from construction_data_lake_et_data_warehouse_tp3_spark.operators.retrieval import (
-            rrf_hybrid_search,
-        )
-
-        plan = (
-            rrf_hybrid_search(spark, "/root/testdata/sf0.001")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        # both candidate pools compile to TakeOrderedAndProject; the rank
-        # windows run AFTER the 20-row pools (SinglePartition on 20 rows
-        # is fine; a corpus-wide single-partition window is not)
-        assert plan.count("TakeOrderedAndProject") >= 2
-
-
 class TestSessionBounceRate:
     def test_planted_sessions(self, spark, tmp_path):
         """User 1: a lone 'view' (bounce), then >30 min later a 3-event

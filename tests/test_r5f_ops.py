@@ -85,33 +85,6 @@ class TestKAnonymityAudit:
         assert {r.risk_share_bp for r in got.values()} == {2500}
 
 
-class TestEmbeddingDrift:
-    def test_identical_halves_cos_one_orthogonal_cos_zero(self, spark, tmp_path):
-        from construction_data_lake_et_data_warehouse_tp3_spark.operators.clustering import (
-            embedding_drift,
-        )
-
-        rows = [
-            # label 0: even and odd halves identical -> drift_cos = 1.0
-            (0, [1.0, 0.0, 0.0, 0.0], 0),
-            (1, [1.0, 0.0, 0.0, 0.0], 0),
-            # label 1: halves orthogonal -> drift_cos = 0.0
-            (2, [0.0, 1.0, 0.0, 0.0], 1),
-            (3, [0.0, 0.0, 1.0, 0.0], 1),
-            # label 2: only an even member -> NULL, not a fabricated 0
-            (4, [0.5, 0.5, 0.0, 0.0], 2),
-        ]
-        out = str(tmp_path / "sf")
-        spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>, label int"
-        ).coalesce(1).write.parquet(f"{out}/embeddings.parquet")
-        got = {r.label: r for r in embedding_drift(spark, out).collect()}
-        assert got[0].drift_cos == pytest.approx(1.0)
-        assert got[0].n_even == 1 and got[0].n_odd == 1
-        assert got[1].drift_cos == pytest.approx(0.0)
-        assert got[2].drift_cos is None
-
-
 class TestTokenLorenz:
     def test_cumulative_shares_exact(self, spark, tmp_path):
         from construction_data_lake_et_data_warehouse_tp3_spark.operators.quality import (

@@ -1,4 +1,4 @@
-"""Mathematical invariants for the r5 statistics/quantization operators —
+"""Mathematical invariants for the r5 statistics operators —
 brute-force Python recomputation on the sf0.001 frame, independent of the
 DuckDB oracle (which shares SQL idioms and could share a blind spot)."""
 
@@ -8,10 +8,6 @@ import math
 
 from pyspark.sql import functions as F
 
-from construction_data_lake_et_data_warehouse_tp3_spark.operators.clustering import (
-    SCALE,
-    quantize_embeddings,
-)
 from construction_data_lake_et_data_warehouse_tp3_spark.operators.statistics import (
     WINSOR_HI,
     WINSOR_LO,
@@ -62,41 +58,6 @@ class TestWinsorizedInvariants:
     def test_winsorized_mean_within_bounds(self, spark):
         for r in winsorized_order_stats(spark, SF_DIR).collect():
             assert r["p05_cents"] <= r["winsorized_avg_cents"] <= r["p95_cents"]
-
-
-class TestQuantizationInvariants:
-    def test_codes_bounded_and_reconstruction_error_half_step(self, spark):
-        """|q| ≤ 127 (saturation only AT the scale component), and the
-        reconstruction x̂ = q·s/127 is within half a quantization step of
-        the micro-unit component: |x − x̂| ≤ s/254 + 1 (the +1 absorbs
-        the integer floor in the code rounding)."""
-        vecs = {
-            r["vec_id"]: r["v"]
-            for r in spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-            .select(
-                "vec_id",
-                F.expr(
-                    f"transform(embedding,"
-                    f" x -> CAST(round(CAST(x AS DOUBLE) * {SCALE}) AS BIGINT))"
-                ).alias("v"),
-            )
-            .collect()
-        }
-        out = {r["vec_id"]: r for r in quantize_embeddings(spark, SF_DIR).collect()}
-        assert set(out) == {vid for vid, v in vecs.items() if any(x != 0 for x in v)}
-        for vid, r in out.items():
-            s = r["scale_micro"]
-            assert s == max(abs(x) for x in vecs[vid])
-            codes = [
-                int(math.copysign((abs(x) * 254 + s) // (2 * s), x)) if x else 0
-                for x in vecs[vid]
-            ]
-            assert all(abs(q) <= 127 for q in codes)
-            assert r["sum_q"] == sum(codes)
-            assert r["l1_q"] == sum(abs(q) for q in codes)
-            assert r["n_saturated"] == sum(1 for q in codes if abs(q) == 127)
-            for x, q in zip(vecs[vid], codes):
-                assert abs(x - q * s / 127) <= s / 254 + 1
 
 
 class TestShareInvariants:

@@ -52,16 +52,13 @@ COSTS = {
     "test_property_r5e.py": 87,
     "test_stateful_sessions.py": 14,
     "test_stream_join.py": 18,
-    "test_ann_stream.py": 8,
     "test_r4_late_ops.py": 23,
-    "test_index_stream.py": 64,
     "test_streaming.py": 35,
     "test_dedup_stream.py": 23,
     "test_r5e_ops.py": 16,
     "test_scd2_stream.py": 14,
     "test_multimodal_plans.py": 12,
     "test_cli.py": 100,
-    "test_ann_index.py": 73,
     "test_oracle_types.py": 11,
     "test_graph.py": 12,
     "test_incremental_sync.py": 10,
@@ -70,11 +67,9 @@ COSTS = {
     "test_rollup_stream.py": 9,
     "test_sketches.py": 9,
     "test_rate_stream_live.py": 8,
-    "test_clustering.py": 14,
     "test_quality.py": 7,
     "test_r5f_ops.py": 7,
     "test_timetravel_schema.py": 7,
-    "test_retrieval.py": 7,
     "test_property_money.py": 6,
     "test_zorder_layout.py": 6,
     "test_bucketing_e2e.py": 3,
