@@ -42,7 +42,7 @@ def _artifacts() -> dict[int, dict]:
 
 def test_scale_artifact_exists_and_is_sane():
     arts = _artifacts()
-    assert arts, "no SCALE_r*.json committed — run tools/scale_tier.py --out"
+    assert arts, "no SCALE_r*.json committed"
     newest = arts[max(arts)]
     assert len(newest) >= 5
     flagged = [
@@ -135,8 +135,7 @@ def test_second_decade_is_subdecade_linear():
             if q not in ("leakage_safe_split", "leakage_safe_split_fast")
         ]
     assert not missing, (
-        f"{missing} lack a second measured decade — run tools/scale_tier.py "
-        "with its default --tier100-queries"
+        f"{missing} lack a second measured decade in the newest SCALE artifact"
     )
     flagged = [
         f"{q}: slope2 {newest[q]['slope2']}x — wall grew FASTER than data "
