@@ -4,9 +4,15 @@ unified (`python -m construction_data_lake_et_data_warehouse_tp3_spark <cmd>`):
   feeds list|add|archive|restore|disable|enable   ≙ manage_feeds.py
   export stream|table                             ≙ export_to_data_lake.py
   retention streams|versions [--dry-run]          ≙ data_retention.py
-  sync-warehouse [--version N]                    ≙ sync_to_mysql.py
+  sync-warehouse [--version N] [--atomic]         ≙ sync_to_mysql.py
   permissions grant|list                          ≙ permissions_manager.py
   generate --topic --messages                     ≙ kafka_producer.py
+  vacuum --root [--keep N]                        (lake-transaction staging)
+  zorder --input --output --columns [--files N]   (Morton-curve layout)
+  compact --path [--target-mb] [--min-files]      (small-file compaction)
+  analyze [--sf-dir] [--tables]                   (CBO table statistics)
+  profile --input [--columns]                     (per-column profile)
+  check --input --output --expect NAME=PREDICATE  (write-time expectations)
   curate --input --store [--eval-shingles]        (continuous manifest)
 
 One SparkSession per invocation; feeds live under --lake-root (default
@@ -154,9 +160,13 @@ def cmd_compact(args) -> int:
     from .lake.maintenance import compact_partition
 
     spark = _spark()
-    stats = compact_partition(
-        spark, args.path, target_file_mb=args.target_mb, min_files_to_compact=args.min_files
-    )
+    try:
+        stats = compact_partition(
+            spark, args.path, target_file_mb=args.target_mb, min_files_to_compact=args.min_files
+        )
+    except ValueError as exc:  # a Spark file-sink partition
+        print(f"error: {exc}", file=sys.stderr)
+        return 1
     print(json.dumps(stats))
     return 0
 

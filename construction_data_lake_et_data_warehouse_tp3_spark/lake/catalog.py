@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import json
 import os
+import tempfile
 from dataclasses import asdict, dataclass, field
 from datetime import datetime, timezone
 from enum import Enum
@@ -39,6 +40,20 @@ class PartitioningType(str, Enum):
 
 def _utcnow() -> str:
     return datetime.now(timezone.utc).isoformat()
+
+
+def write_json(path: str, data: dict) -> None:
+    """Replace the JSON file at `path` atomically: write a temp file in the
+    same directory, then os.replace it over the old one. A crash mid-dump
+    leaves the previous file whole (and a stray dot-named temp file)."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), prefix=".", suffix=".tmp")
+    try:
+        with os.fdopen(fd, "w") as fh:
+            json.dump(data, fh, indent=2)
+        os.replace(tmp, path)
+    except BaseException:
+        os.remove(tmp)
+        raise
 
 
 @dataclass
@@ -100,8 +115,7 @@ class FeedCatalog:
         for key, value in data.items():
             if isinstance(value, Enum):
                 data[key] = value.value
-        with open(self._path(config.feed_name, archived), "w") as fh:
-            json.dump(data, fh, indent=2)
+        write_json(self._path(config.feed_name, archived), data)
 
     def _read(self, name: str, archived: bool = False) -> FeedConfig:
         path = self._path(name, archived)

@@ -6,6 +6,11 @@ that means millions of small files and a metadata-bound scan. Compaction
 rewrites a partition's many small files into few right-sized ones with
 an atomic directory swap, preserving every row.
 
+A partition under a Spark file sink is refused: the sink's
+`_spark_metadata` log lists the files it wrote, and after a swap it
+would still name the deleted ones, so every later read of the feed
+fails. Compacting such a feed needs a commit through a log.
+
 Target sizing: files ≈ total_bytes / target_file_mb, min 1. The rewrite
 is one narrow job (read → coalesce → write); no shuffle unless the
 partition is wildly over-split, in which case coalesce just merges
@@ -30,6 +35,19 @@ def partition_file_stats(path: str) -> tuple[int, int]:
     return n, total
 
 
+def _file_sink_root(path: str) -> str | None:
+    """The nearest directory at or above `path` that holds a Spark
+    file-sink log (`_spark_metadata`), or None."""
+    here = os.path.abspath(path)
+    while True:
+        if os.path.isdir(os.path.join(here, "_spark_metadata")):
+            return here
+        parent = os.path.dirname(here)
+        if parent == here:
+            return None
+        here = parent
+
+
 def compact_partition(
     spark: SparkSession,
     partition_path: str,
@@ -40,7 +58,15 @@ def compact_partition(
 
     Returns stats; no-op (files_before < min_files_to_compact) keeps the
     partition untouched. Row counts are preserved (verified before swap).
+    Raises ValueError, touching nothing, for a partition of a Spark
+    file-sink feed.
     """
+    sink = _file_sink_root(partition_path)
+    if sink is not None:
+        raise ValueError(
+            f"{partition_path} belongs to the Spark file sink at {sink}: its "
+            "_spark_metadata log would still list the replaced files"
+        )
     files_before, total_bytes = partition_file_stats(partition_path)
     if files_before < min_files_to_compact:
         return {"skipped": True, "files_before": files_before}

@@ -3,9 +3,10 @@
 - stream retention: delete day-partitions older than now - retention_days
   (data_retention.py:29-51) — a pure partition-pruning delete: only
   directory names are inspected, no data files are read.
-- version retention: keep the newest K version dirs
-  (data_retention.py:54-78; count-based, unlike Delta's age-based VACUUM —
-  SURVEY §4 notes this needs custom code).
+- version retention: keep the newest K committed versions of a
+  versioned feed (data_retention.py:54-78; count-based, unlike Delta's
+  age-based VACUUM — SURVEY §4 notes this needs custom code) by expiring
+  older snapshots from the feed's transaction log.
 
 Both support dry_run (data_retention.py:41-42,73-75).
 """
@@ -17,6 +18,8 @@ import os
 import re
 import shutil
 from datetime import date, datetime, timedelta, timezone
+
+from .transaction import Lakehouse, _txn_dir
 
 _DATE_PART = re.compile(r"year=(\d+)/month=(\d+)/day=(\d+)$")
 
@@ -62,24 +65,24 @@ def apply_stream_retention(
     return victims
 
 
-def list_versions(feed_path: str) -> list[tuple[int, str]]:
-    out = []
-    for path in glob.glob(os.path.join(feed_path, "version=v*")):
-        suffix = os.path.basename(path).replace("version=v", "")
-        if suffix.isdigit():
-            out.append((int(suffix), path))
-    return sorted(out)
-
-
 def apply_version_retention(
     feed_path: str, keep_versions: int, dry_run: bool = False
 ) -> list[str]:
-    """Keep the newest `keep_versions` versions, delete the rest
-    (data_retention.py:60-69; CLI default 5 vs config default 7 is the
-    caller's choice — SURVEY §7 risk 6)."""
-    versions = list_versions(feed_path)
-    victims = [path for _n, path in versions[:-keep_versions]] if keep_versions else []
+    """Keep the newest `keep_versions` committed versions of the versioned
+    feed at `feed_path` and delete the rest (data_retention.py:60-69; CLI
+    default 5 vs config default 7 is the caller's choice — SURVEY §7
+    risk 6); returns the staged directories deleted. Only committed,
+    superseded snapshots expire: an export still in flight is not a
+    version yet, and `Lakehouse.vacuum` protects its staging. A dry run
+    reads only the log and lists the directories of the snapshots that
+    would be dropped."""
+    if not keep_versions:
+        return []
+    lake = Lakehouse(None, feed_path)  # vacuum and the log need no session
     if not dry_run:
-        for path in victims:
-            shutil.rmtree(path)
-    return victims
+        return lake.vacuum(keep_snapshots=keep_versions)
+    return [
+        _txn_dir(feed_path, rel)
+        for n in lake._committed_snapshots()[:-keep_versions]
+        for rel in lake._manifest(n)["tables"].values()
+    ]

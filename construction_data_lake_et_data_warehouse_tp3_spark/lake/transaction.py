@@ -5,10 +5,11 @@ which per-table version commits cannot guarantee (the reference's MySQL
 warehouse gets this from InnoDB transactions, sync_to_mysql.py:117-142;
 the lake needs its own). The same log also commits single-table writes:
 each warehouse `ParquetTable` (warehouse/merge.py) — and so every
-warehouse MERGE and every streaming state store built on one — is the
-one table of its own Lakehouse. Only the versioned feeds keep their own
-`_commit_log` (lake/writer.py), because a feed version's number is in
-its `version=vN` directory name before the write starts.
+warehouse MERGE and every streaming state store built on one — and each
+versioned feed (lake/writer.py, whose version is the snapshot number)
+is the one table of its own Lakehouse. It is the engine's one commit
+protocol; the raw zone's Spark file-sink `_spark_metadata` is the only
+other log.
 
 Design (Delta/Iceberg-shaped, filesystem-atomic primitives only):
 

@@ -28,8 +28,8 @@ def top_orders_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def latest_version_per_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """#41/#42 max-version scan: the reference globs version=v* dirs and
-    takes max+1 (export_to_data_lake.py:235-245). Engine equivalent: window
+    """#41/#42 max-version scan: the reference globs its version
+    directories and takes max+1 (export_to_data_lake.py:235-245). Engine equivalent: window
     row_number over a version-ish column — here, each user's latest event."""
     events = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))

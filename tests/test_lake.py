@@ -4,6 +4,9 @@ against the reference behaviors cited in SURVEY §2.11."""
 
 from __future__ import annotations
 
+import glob
+import json
+import os
 from datetime import datetime
 
 import pytest
@@ -44,6 +47,10 @@ def table_cfg(name="user_summary", keep=3):
         storage_mode=StorageMode.OVERWRITE,
         keep_versions=keep,
     )
+
+
+def _staged(feed_path):
+    return glob.glob(os.path.join(feed_path, "tables", "*", "_txn_*"))
 
 
 class TestCatalog:
@@ -139,13 +146,16 @@ class TestWriter:
         df = spark.range(5).selectExpr("id", "id * 1.5 AS v")
         versions = [writer.export_table(df, config)["version"] for _ in range(5)]
         assert versions == [1, 2, 3, 4, 5]
-        from construction_data_lake_et_data_warehouse_tp3_spark.lake.retention import (
-            list_versions,
-        )
-
-        kept = [n for n, _ in list_versions(catalog.feed_data_path(config))]
+        with open(writer._metadata_path(config)) as fh:
+            entries = json.load(fh)["partitions"]
+        assert [p["path"] for p in entries] == [f"version=v{n}" for n in versions]
+        assert all(p["records"] == 5 and p["size_mb"] > 0 for p in entries)
+        kept = sorted(writer.committed_versions(config))
         assert kept == [3, 4, 5]  # newest keep_versions survive
+        assert len(_staged(catalog.feed_data_path(config))) == 3  # data too
         assert writer.read_table_feed(config).count() == 5  # latest readable
+        with pytest.raises(LookupError):
+            writer.read_table_feed(config, version=2)
 
     def test_export_table_counts_rows_in_the_write_job(self, spark, catalog, tmp_path):
         """export_table's Spark jobs are the isEmpty() guard and the write,
@@ -194,13 +204,46 @@ class TestRetention:
         assert sorted(deleted) == sorted(preview)
         assert writer.read_stream_feed(config).count() == 3  # only today's rows
 
-    def test_version_retention_dry_run(self, tmp_path):
-        import os
-
-        feed = tmp_path / "feed"
+    def test_version_retention_dry_run(self, spark, catalog):
+        config = catalog.add(table_cfg(keep=None))
+        writer = DataLakeWriter(spark, catalog)
         for n in range(1, 6):
-            os.makedirs(feed / f"version=v{n}")
-        preview = apply_version_retention(str(feed), keep_versions=2, dry_run=True)
+            writer.export_table(spark.range(n), config)
+        feed = catalog.feed_data_path(config)
+        preview = apply_version_retention(feed, keep_versions=2, dry_run=True)
         assert len(preview) == 3
-        apply_version_retention(str(feed), keep_versions=2)
-        assert sorted(os.listdir(feed)) == ["version=v4", "version=v5"]
+        assert writer.committed_versions(config) == {1, 2, 3, 4, 5}
+        deleted = apply_version_retention(feed, keep_versions=2)
+        assert sorted(deleted) == sorted(preview)
+        assert writer.committed_versions(config) == {4, 5}
+        assert len(_staged(feed)) == 2
+        assert writer.read_table_feed(config).count() == 5
+
+
+class Crash(Exception):
+    pass
+
+
+class TestCrashSafeSidecars:
+    def test_torn_json_dump_keeps_previous_files(self, spark, catalog, monkeypatch):
+        """A crash inside json.dump leaves the feed config and the stats
+        sidecar as they were, and both still parse."""
+        config = catalog.add(stream_cfg())
+        writer = DataLakeWriter(spark, catalog)
+        df = spark.range(5).selectExpr("id")
+        writer.export_stream(df, config)
+
+        def torn(obj, fh, **kwargs):
+            fh.write('{"partial": ')
+            raise Crash
+
+        with monkeypatch.context() as patch:
+            patch.setattr(json, "dump", torn)
+            with pytest.raises(Crash):
+                catalog.update("tx_stream", description="changed")
+            with pytest.raises(Crash):
+                writer.export_stream(df, config)
+        assert catalog.get("tx_stream").description == ""
+        with open(writer._metadata_path(config)) as fh:
+            assert json.load(fh)["total_records"] == 5
+        assert writer.export_stream(df, config)["records"] == 5

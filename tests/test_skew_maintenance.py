@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import glob
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,6 +14,11 @@ from construction_data_lake_et_data_warehouse_tp3_spark.functions.skew import (
 from construction_data_lake_et_data_warehouse_tp3_spark.lake.maintenance import (
     compact_partition,
     partition_file_stats,
+)
+from construction_data_lake_et_data_warehouse_tp3_spark.sources import generator
+from construction_data_lake_et_data_warehouse_tp3_spark.streaming import (
+    ingest_stream_to_lake,
+    json_feed_schema,
 )
 
 
@@ -67,3 +74,25 @@ class TestCompaction:
         spark.range(100).coalesce(1).write.parquet(part)
         stats = compact_partition(spark, part, min_files_to_compact=4)
         assert stats["skipped"]
+
+    def test_refuses_file_sink_partition_and_feed_stays_readable(
+        self, spark, tmp_path
+    ):
+        """Five micro-batches of Spark's parquet file sink land five files
+        in one day partition. The sink's `_spark_metadata` log lists them,
+        so swapping in a compacted file would break every later read of
+        the feed: compaction refuses and leaves the partition as it was."""
+        topic, out = str(tmp_path / "topic"), str(tmp_path / "raw")
+        generator.transaction_batch(spark, 50).repartition(5).write.json(topic)
+        stream = (
+            spark.readStream.schema(json_feed_schema("transaction_stream"))
+            .option("maxFilesPerTrigger", 1)
+            .json(topic)
+        )
+        ingest_stream_to_lake(stream, out, str(tmp_path / "ckpt")).awaitTermination(120)
+        (part,) = glob.glob(f"{out}/year=*/month=*/day=*")
+        assert partition_file_stats(part)[0] == 5
+        with pytest.raises(ValueError, match="_spark_metadata"):
+            compact_partition(spark, part, min_files_to_compact=4)
+        assert partition_file_stats(part)[0] == 5
+        assert spark.read.parquet(out).count() == 50

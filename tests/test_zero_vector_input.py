@@ -22,7 +22,7 @@ OTHER_TABLES = (
 
 #: the embedding-consuming registry queries (name-pattern selection keeps
 #: the sweep self-extending as the family grows)
-PATTERNS = ("cosine", "ivf", "ann", "embedding", "lsh_buckets")
+PATTERNS = ("cosine", "ivf", "ann_", "embedding", "lsh_buckets")
 
 
 @pytest.fixture(scope="module")
