@@ -98,9 +98,13 @@ def cmd_retention(args) -> int:
     for cfg in catalog.list():
         path = catalog.feed_data_path(cfg)
         if args.kind == "streams" and cfg.feed_type is FeedType.STREAM:
-            victims = apply_stream_retention(
-                path, args.days or cfg.retention_days or 365, dry_run=args.dry_run
-            )
+            try:
+                victims = apply_stream_retention(
+                    path, args.days or cfg.retention_days or 365, dry_run=args.dry_run
+                )
+            except ValueError as exc:  # a file-sink feed: refused, untouched
+                print(f"{cfg.feed_name}: refused: {exc}")
+                continue
         elif args.kind == "versions" and cfg.feed_type is FeedType.TABLE:
             victims = apply_version_retention(
                 path, args.keep or cfg.keep_versions or 7, dry_run=args.dry_run

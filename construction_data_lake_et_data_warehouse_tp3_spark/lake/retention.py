@@ -19,6 +19,7 @@ import re
 import shutil
 from datetime import date, datetime, timedelta, timezone
 
+from .maintenance import _file_sink_root
 from .transaction import Lakehouse, _txn_dir
 
 _DATE_PART = re.compile(r"year=(\d+)/month=(\d+)/day=(\d+)$")
@@ -47,7 +48,15 @@ def apply_stream_retention(
 ) -> list[str]:
     """Delete day-partitions older than the cutoff; returns deleted (or
     would-delete) partition paths. Prunes empty parent dirs like
-    data_retention.py:44-51."""
+    data_retention.py:44-51. Raises ValueError, touching nothing, for a
+    feed under a Spark file sink: its `_spark_metadata` log would still
+    list the deleted files and every later read of the feed would fail."""
+    sink = _file_sink_root(feed_path)
+    if sink is not None:
+        raise ValueError(
+            f"{feed_path} belongs to the Spark file sink at {sink}: its "
+            "_spark_metadata log would still list the deleted partitions"
+        )
     # UTC, matching DataLakeWriter.export_stream's partitioning clock — a
     # naive local-time cutoff can delete/retain a day-partition off by one
     # near midnight on a non-UTC host (ADVICE r1)

@@ -47,6 +47,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.registry import read_parquet
 from .observe import counted
 
 
@@ -95,8 +96,9 @@ class LakeTransaction:
         """This transaction's current view of `table`: its own staged
         state if it wrote one, else the committed snapshot."""
         if table in self.staged:
-            return self.lakehouse.spark.read.parquet(
-                os.path.join(self.lakehouse.root, self.staged[table])
+            return read_parquet(
+                self.lakehouse.spark,
+                os.path.join(self.lakehouse.root, self.staged[table]),
             )
         return self.lakehouse.read(table)
 
@@ -241,7 +243,7 @@ class Lakehouse:
     # ---- read side ------------------------------------------------------
 
     def read(self, table: str, snapshot: int | None = None) -> DataFrame:
-        return self.spark.read.parquet(self._resolve(table, snapshot))
+        return read_parquet(self.spark, self._resolve(table, snapshot))
 
     def tables(self, snapshot: int | None = None) -> dict[str, str]:
         """Every table visible at `snapshot` → its resolved directory."""
@@ -271,7 +273,10 @@ class Lakehouse:
         would publish a manifest pointing at nothing (silent loss on
         read). Markers older than the threshold are presumed crashed and
         reclaimed along with their staging; pass 0 only when no writer
-        can be live (maintenance windows, tests)."""
+        can be live (maintenance windows, tests). The same window applies
+        to a `.claim` that never got its manifest: a commit that died
+        between claim and rename leaves it and its temp manifest, and
+        both are removed once older than the window."""
         # Scan active markers BEFORE resolving commits/live: a transaction
         # that commits mid-vacuum clears its marker, and if markers were
         # read last it would be neither live (manifest landed after the
@@ -343,6 +348,27 @@ class Lakehouse:
                 path = os.path.join(self._log_dir, f"{n}{suffix}")
                 if os.path.exists(path):
                     os.remove(path)
+        # a claim with no manifest is a commit that died before its rename
+        # (or a removal torn between the two files above): once the claim
+        # and its temp manifest are older than the crash window, both go
+        for claim in glob.glob(os.path.join(self._log_dir, "*.claim")):
+            stem = os.path.basename(claim).removesuffix(".claim")
+            if not stem.isdigit() or os.path.exists(
+                os.path.join(self._log_dir, f"{stem}.json")
+            ):
+                continue
+            orphan = [claim, os.path.join(self._log_dir, f".{stem}.json.tmp")]
+            try:
+                ages = [now - os.path.getmtime(p) for p in orphan if os.path.exists(p)]
+            except OSError:
+                continue  # raced away: its commit finished or was reclaimed
+            if min(ages, default=0.0) < min_txn_age_seconds:
+                continue
+            for path in orphan:
+                try:
+                    os.remove(path)
+                except FileNotFoundError:
+                    pass
         return removed
 
     # ---- change data feed ------------------------------------------------
@@ -380,7 +406,7 @@ class Lakehouse:
             raise KeyError(f"table {table!r} exists at neither snapshot")
 
         def _packed(path: str, alias: str) -> DataFrame:
-            df = self.spark.read.parquet(path)
+            df = read_parquet(self.spark, path)
             value_cols = [c for c in df.columns if c not in keys]
             return df.select(*keys, F.struct(*value_cols).alias(alias))
 

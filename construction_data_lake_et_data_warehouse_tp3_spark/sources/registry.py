@@ -8,6 +8,10 @@ predicate pushdown and column pruning arrive for free via Catalyst.
 
 from __future__ import annotations
 
+import os
+import threading
+from collections import OrderedDict
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -54,20 +58,21 @@ FACT_TABLES = frozenset({"documents", "embeddings"})
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one testdata table. Pure `spark.read.parquet` plus ns→µs
+    """Scan one testdata table. A parquet scan (`read_parquet`) plus ns→µs
     timestamp repair and the small-input parallelism fix above — filters
     and column pruning still push through to the scan (Catalyst pushes
     predicates through Repartition nodes)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     # idempotent safety net for driver-provided sessions that skipped
-    # session.tune(); no-op when already set (VERDICT r2 nit: guard once)
+    # session.tune(); one conf read when it is already set
     try:
         if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    df, entry = _read_cached(spark, path)
     for col in TIMESTAMP_NS_COLS.get(name, ()):
         field = df.schema[col]
         if field.dataType.simpleString() == "bigint":
@@ -76,21 +81,90 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
     if name in FACT_TABLES:
         # ROW-GROUP heuristic (no plan materialization — one footer
-        # read): Spark splits a parquet file by bytes, but a task only
-        # reads row groups whose midpoint falls in its split, so the
-        # scan's real parallelism ceiling is the ROW-GROUP count, not
-        # the byte count. The old <64 MB file-size guard missed exactly
-        # the case that mattered: the 584 MB 5M-doc third-decade tier is
-        # "big" by bytes but carries 5 row groups — the minhash fold ran
-        # 5-wide on a 32-core box, a 6.4× parallelism cliff that was a
-        # dominant term of the r11 slope3 blowup (SCALING.md r12). On a
-        # real 100 TB multi-file layout row groups vastly outnumber the
-        # parallelism and this branch never fires.
-        if _scan_row_groups(f"{sf_dir}/{name}.parquet") < (
-            para := spark.sparkContext.defaultParallelism
-        ):
+        # read, kept in the schema's cache entry): Spark splits a parquet
+        # file by bytes, but a task only reads row groups whose midpoint
+        # falls in its split, so the scan's real parallelism ceiling is
+        # the ROW-GROUP count, not the byte count. A file-size guard
+        # misses exactly the case that matters: a 584 MB 5M-document
+        # table written as 5 row groups is "big" by bytes, yet its minhash
+        # fold would run 5-wide on a 32-core box. On a real multi-file
+        # layout row groups vastly outnumber the parallelism and this
+        # branch never fires.
+        if entry.get("row_groups") is None:
+            entry["row_groups"] = _scan_row_groups(path)
+        if entry["row_groups"] < (para := spark.sparkContext.defaultParallelism):
             df = df.repartition(para)
     return df
+
+
+#: Confs that change the schema parquet inference returns for one set of
+#: files; their values are part of a cached schema's key.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+_SCHEMA_CACHE_SIZE = 512
+#: (path, file stamps, inference confs) → {"schema", "row_groups"}, least
+#: recently used first. Metadata only: a hit still scans the files.
+_schema_cache: OrderedDict[tuple, dict] = OrderedDict()
+_schema_lock = threading.Lock()
+
+
+def _file_stamps(path: str) -> tuple:
+    """(relative name, size, mtime_ns) of the file at `path` or of every
+    file under it; empty when `path` is no local file or directory."""
+    if os.path.isfile(path):
+        try:
+            st = os.stat(path)
+        except FileNotFoundError:  # removed since: Spark reports it
+            return ()
+        return (("", st.st_size, st.st_mtime_ns),)
+    stamps = []
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        for name in sorted(files):
+            full = os.path.join(root, name)
+            try:
+                st = os.stat(full)
+            except FileNotFoundError:
+                continue
+            stamps.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(stamps)
+
+
+def _read_cached(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
+    """`read_parquet` plus the path's cache entry (a fresh, uncached one
+    when the path has no local files to stamp)."""
+    stamps = _file_stamps(path)
+    if not stamps:  # missing, empty or non-local: Spark decides, nothing kept
+        return spark.read.parquet(path), {}
+    key = (path, stamps, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    with _schema_lock:
+        entry = _schema_cache.get(key)
+        if entry is not None:
+            _schema_cache.move_to_end(key)
+    if entry is not None:
+        return spark.read.schema(entry["schema"]).parquet(path), entry
+    df = spark.read.parquet(path)  # infers; a failure raises and is not kept
+    entry = {"schema": df.schema, "row_groups": None}
+    with _schema_lock:
+        _schema_cache[key] = entry
+        while len(_schema_cache) > _SCHEMA_CACHE_SIZE:
+            _schema_cache.popitem(last=False)
+    return df, entry
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` without its schema-inference Spark job
+    when the files under `path` are unchanged since an earlier read: the
+    schema is inferred once per (path, file names, sizes, mtimes,
+    inference confs) and passed to the reader after that. A missing or
+    empty path raises Spark's own AnalysisException, as a plain read
+    does. Rewriting a file must change its size or mtime to be seen."""
+    return _read_cached(spark, path)[0]
 
 
 def _scan_row_groups(path: str) -> int:
@@ -98,7 +172,6 @@ def _scan_row_groups(path: str) -> int:
     footer metadata only; returns a large sentinel when unreadable so
     the caller skips the repartition rather than guessing."""
     import glob as _glob
-    import os
 
     try:
         import pyarrow.parquet as pq

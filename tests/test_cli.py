@@ -28,6 +28,22 @@ class TestCli:
         assert main(["--lake-root", root, "retention", "streams", "--dry-run"]) == 0
         assert "would delete" in capsys.readouterr().out
 
+    def test_retention_refuses_file_sink_feed_and_goes_on(self, tmp_path, capsys):
+        import os
+
+        from construction_data_lake_et_data_warehouse_tp3_spark.lake import FeedCatalog
+
+        root = str(tmp_path / "lake")
+        for name in ("sink", "plain"):
+            main(["--lake-root", root, "feeds", "add", name, "--type", "stream"])
+        catalog = FeedCatalog(root)
+        sink_path = catalog.feed_data_path(catalog.get("sink"))
+        os.makedirs(os.path.join(sink_path, "_spark_metadata"))
+        assert main(["--lake-root", root, "retention", "streams", "--dry-run"]) == 0
+        out = capsys.readouterr().out
+        assert "sink: refused" in out and "_spark_metadata" in out
+        assert "plain: would delete 0 partitions" in out
+
     def test_zorder_verb(self, tmp_path, capsys):
         out_dir = str(tmp_path / "z")
         assert main([

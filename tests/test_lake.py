@@ -204,6 +204,34 @@ class TestRetention:
         assert sorted(deleted) == sorted(preview)
         assert writer.read_stream_feed(config).count() == 3  # only today's rows
 
+    def test_stream_retention_refuses_file_sink_feed(self, spark, tmp_path):
+        """A feed landed by Spark's file sink is listed in its
+        `_spark_metadata` log: deleting day partitions under it would
+        break every later read, so retention refuses and deletes nothing."""
+        from datetime import datetime, timedelta, timezone
+
+        from construction_data_lake_et_data_warehouse_tp3_spark.sources import generator
+        from construction_data_lake_et_data_warehouse_tp3_spark.streaming import (
+            ingest_stream_to_lake,
+            json_feed_schema,
+        )
+
+        topic, out = str(tmp_path / "topic"), str(tmp_path / "raw")
+        generator.transaction_batch(spark, 20).repartition(2).write.json(topic)
+        stream = (
+            spark.readStream.schema(json_feed_schema("transaction_stream"))
+            .option("maxFilesPerTrigger", 1)
+            .json(topic)
+        )
+        ingest_stream_to_lake(stream, out, str(tmp_path / "ckpt")).awaitTermination(120)
+        days = glob.glob(f"{out}/year=*/month=*/day=*")
+        assert days
+        later = datetime.now(timezone.utc) + timedelta(days=400)
+        with pytest.raises(ValueError, match="_spark_metadata"):
+            apply_stream_retention(out, retention_days=365, now=later)
+        assert glob.glob(f"{out}/year=*/month=*/day=*") == days
+        assert spark.read.parquet(out).count() == 20
+
     def test_version_retention_dry_run(self, spark, catalog):
         config = catalog.add(table_cfg(keep=None))
         writer = DataLakeWriter(spark, catalog)

@@ -223,6 +223,36 @@ class TestVacuum:
         assert all("_txn_" + doomed.txn_id not in p for p in staged_left)
         assert lh.read("dim").collect()[0].v == "v1"
 
+    def test_vacuum_reclaims_old_orphan_claims_only(self, spark, tmp_path):
+        """A commit that died between its claim and its manifest rename
+        leaves `<n>.claim` and `.<n>.json.tmp`. Once both are older than
+        the crash window vacuum removes them; a young claim may be a live
+        commit and stays."""
+        import time
+
+        lh = Lakehouse(spark, str(tmp_path / "lh"))
+        t0 = lh.begin()
+        t0.write("dim", _df(spark, [(1, "v1")]))
+        t0.commit()
+        log = os.path.join(str(tmp_path / "lh"), "_txn_log")
+        old = [os.path.join(log, "2.claim"), os.path.join(log, ".2.json.tmp")]
+        young = os.path.join(log, "3.claim")
+        for path in (*old, young):
+            with open(path, "w") as fh:
+                fh.write("crashed")
+        two_days_ago = time.time() - 2 * 86400
+        for path in old:
+            os.utime(path, (two_days_ago, two_days_ago))
+
+        lh.vacuum(keep_snapshots=1)
+        assert not any(os.path.exists(p) for p in old)
+        assert os.path.exists(young)
+        t1 = lh.begin()
+        t1.write("dim", _df(spark, [(2, "v2")]))
+        assert t1.commit() == 4  # past the young claim
+        assert lh.read("dim").collect()[0].v == "v2"
+        assert lh.read("dim", 1).collect()[0].v == "v1"
+
 
 class TestChangeDataFeed:
     """Lakehouse.diff: snapshot-to-snapshot CDC (insert/update/delete,
