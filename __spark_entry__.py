@@ -6,11 +6,10 @@
   the beyond-reference dedup/similarity/text surface; (spark, sf_dir) ->
   DataFrame.
 - ``oracle_sql()``    — DuckDB-equivalent ANSI SQL per query (omitted only
-  for approximate / non-SQL-expressible operators, which the driver checks
-  rows-only; those keys are declared BY DESIGN in
-  ``operators.BY_DESIGN_ROWS_ONLY``, each mapped to the exact ``_check``
-  twin that hash-locks it — a scripted CORRECTNESS consumer should read a
-  ``no_oracle`` row for a marked key as expected, not as an error).
+  for approximate operators, which can only be checked by rows; those
+  keys are listed in ``operators.BY_DESIGN_ROWS_ONLY``, each mapped to
+  the exact ``_check`` twin that locks the same pipeline against DuckDB,
+  so a missing oracle for a listed key is expected, not an error).
 
 Implementations live in construction_data_lake_et_data_warehouse_tp3_spark/
 (operators/*.py); this module is a thin registry view over them.

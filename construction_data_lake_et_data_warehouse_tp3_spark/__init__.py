@@ -26,21 +26,3 @@ Architecture (Spark-first, NOT a port):
 """
 
 __version__ = "0.1.0"
-
-import os as _os
-
-# Python workers must import this package to unpickle the mapInPandas
-# kernels (multimodal decode, pandas UDAFs): cloudpickle serializes the
-# nested `run` closures by value but their module-level helpers
-# (decode_wav / decode_ppm / ...) by reference.  When the launching
-# process imports the package from a cwd other than the repo root, the
-# forked workers would fail with an ImportError inside read_udfs — so
-# export the package parent onto PYTHONPATH *at import time*, before any
-# SparkSession (and hence the worker-spawning JVM) starts.
-_PKG_PARENT = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-_pp = _os.environ.get("PYTHONPATH", "")
-if _PKG_PARENT not in _pp.split(_os.pathsep):
-    _os.environ["PYTHONPATH"] = (
-        _PKG_PARENT + (_os.pathsep + _pp if _pp else "")
-    )
-del _os, _pp

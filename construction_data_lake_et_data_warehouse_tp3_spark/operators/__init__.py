@@ -4,11 +4,11 @@ Each module exposes two dicts:
 
 - ``QUERIES``: name -> callable(spark, sf_dir) -> DataFrame  (Spark impl)
 - ``ORACLE``:  name -> ANSI-SQL string for DuckDB over the same parquet
-  views (omitted for non-SQL-expressible operators → driver records a
-  rows-only check).
+  views (omitted for non-SQL-expressible operators, which a parity
+  check can only compare by rows).
 
-``all_queries()`` / ``all_oracle()`` merge every module for the driver
-contract in /root/repo/__spark_entry__.py.
+``all_queries()`` / ``all_oracle()`` merge every module, in ``_MODULES``
+order, for the driver contract in ``__spark_entry__.py``.
 """
 
 from __future__ import annotations
@@ -39,232 +39,12 @@ _MODULES = (
 )
 
 
-# Enumeration priority for the driver's correctness harness, which checks at
-# most ~50 queries per round in registry order.  Queries with no driver-green
-# row in any prior round enumerate first so every query accumulates at least
-# one CORRECTNESS_r{N} row across rounds; long-green queries rotate to the
-# back.
-# STRICT staleness order (VERDICT r8 ask #2): each query sorted by the
-# round of its latest green driver row — oldest block first, then the
-# younger blocks, alphabetical within a block (the concrete block
-# membership changes every round; see the generated-on marker below,
-# never this comment). GENERATED, not hand-maintained: run
-# `python tools/rotate_priority.py` at round start; its --check mode
-# and tests/test_freshness.py both fail the suite if the committed
-# tuple stops being stalest-first. The driver checks ~50/round, so
-# this ordering refreshes the oldest fifth of the registry every round
-# and no row ever ages past 4 rounds.
-# GOVERNANCE (VERDICT r7 ask #5): the registry is CAPPED at
-# 200 = 4 rounds x 50 driver checks; a new query must replace a
-# retired one. tools/freshness.py (run by tests/test_freshness.py)
-# enforces both invariants: it fails the suite if any query's latest
-# green row is >4 rounds older than the newest committed CORRECTNESS
-# file, if a registry query has no committed row and no head-of-line
-# priority slot, or if the registry outgrows rotation capacity.
-# [generated] tools/rotate_priority.py from CORRECTNESS r01..r13
-_DRIVER_PRIORITY = (
-    "ab_test_zscore",
-    "arrow_doc_stats",
-    "benford_first_digit",
-    "bootstrap_revenue_ci",
-    "cohort_ltv",
-    "cumulative_unique_users",
-    "cusum_changepoint",
-    "daily_value_percentiles",
-    "degree_assortativity",
-    "event_path_trigrams",
-    "ewma_daily_revenue",
-    "item_similarity_topk",
-    "k_anonymity_audit",
-    "kmv_distinct_users",
-    "kmv_user_overlap",
-    "last_touch_attribution",
-    "length_histogram",
-    "link_prediction_jaccard",
-    "mom_revenue_growth",
-    "ngram_novelty",
-    "pareto_front_customers",
-    "ppm_resize_blocks",
-    "profile_table",
-    "purchase_streaks",
-    "quantity_discount_corr",
-    "revenue_gini",
-    "revenue_trend_slope",
-    "seasonal_decomposition",
-    "seasonal_naive_backtest",
-    "session_bounce_rate",
-    "source_lang_entropy",
-    "status_priority_mi",
-    "suspect_duplicate_orders",
-    "target_encoding_loo",
-    "term_pmi_pairs",
-    "time_to_conversion",
-    "token_lorenz_by_source",
-    "training_manifest",
-    "triangle_participation",
-    "unpivot_status_revenue",
-    "value_percentiles_by_type",
-    "weekday_hour_heatmap",
-    "winsorized_order_stats",
-    "y4m_keyframe_sample",
-    "ab_test_mannwhitney",
-    "array_functions_showcase",
-    "basket_lift",
-    "bigram_surprisal",
-    "cms_heavy_hitters",
-    "customer_order_counts_left",
-    "dau_wau_stickiness",
-    "degree_distribution",
-    "deterministic_sample",
-    "dup_rate_by_source",
-    "event_funnel",
-    "event_transition_matrix",
-    "events_json_props",
-    "exists_high_qty_orders",
-    "feature_hashing",
-    "interpolate_daily_revenue",
-    "inverted_index",
-    "kcore_products",
-    "kruskal_wallis_priority",
-    "lang_id_confusion",
-    "median_order_value",
-    "median_order_value_approx_check",
-    "new_vs_returning_revenue",
-    "order_gap_histogram",
-    "pareto_revenue_share",
-    "ppjoin_jaccard_pairs",
-    "product_purchase_counts_approx_check",
-    "quantile_sketch_check",
-    "retention_cohorts",
-    "revenue_acf",
-    "revenue_anomalies",
-    "rfm_segments",
-    "scd2_user_state_history",
-    "status_priority_chisq",
-    "supplier_hhi",
-    "tpch_q11",
-    "tpch_q16",
-    "tpch_q2",
-    "tpch_q20",
-    "wav_audio_stats",
-    "weekday_revenue_profile",
-    "y4m_video_stats",
-    "above_avg_orders",
-    "amount_bucket_histogram",
-    "ann_ivf_topk",
-    "anonymize_stream",
-    "apply_in_pandas_group_stats",
-    "blacklist_filter",
-    "bpe_token_count",
-    "cosine_topk",
-    "cube_revenue",
-    "doc_fingerprint",
-    "embedding_dup_pairs",
-    "embedding_dup_pairs_bucketed",
-    "fk_miss_detection",
-    "grouping_sets_revenue",
-    "kmv_distinct_check",
-    "lang_id",
-    "latest_version_per_feed",
-    "lsh_buckets",
-    "median_order_value_approx",
-    "minhash_verified_dups",
-    "multimodal_features",
-    "ngram_jaccard_pairs",
-    "open_only_buyers_except",
-    "order_event_days_full",
-    "order_status_matrix",
-    "pandas_scalar_norm",
-    "pandas_udaf_value_stats",
-    "payment_method_lookup",
-    "payment_method_totals",
-    "pivot_status_revenue",
-    "ppm_pixel_stats",
-    "price_band_range_join",
-    "product_purchase_counts",
-    "product_purchase_counts_approx",
-    "projection_pushdown",
-    "regexp_extract_ids",
-    "repeat_buyers_intersect",
-    "retention_candidates",
-    "rolling_7d_revenue",
-    "rollup_revenue",
-    "simhash_hamming_pairs",
-    "simhash_signatures",
-    "star_schema_revenue",
-    "string_functions_showcase",
-    "text_quality",
-    "tfidf_top_terms",
-    "asof_latest_order",
-    "daily_event_stats",
-    "decontaminate",
-    "dedup_exact",
-    "domain_mix",
-    "dq_audit_orders",
-    "edit_distance_pairs",
-    "event_sessions",
-    "hopping_window_events",
-    "lm_surprisal",
-    "minhash_lsh_candidates",
-    "pagerank_products",
-    "pii_scrub",
-    "quality_filters",
-    "ranking_windows_showcase",
-    "repetition_stats",
-    "resample_daily_revenue",
-    "scalar_datetime_ops",
-    "session_window_stats",
-    "substring_dup_pairs",
-    "time_bucket_rollup",
-    "token_count",
-    "top_event_per_user",
-    "top_orders_limit",
-    "tpch_q1",
-    "tpch_q10",
-    "tpch_q12",
-    "tpch_q13",
-    "tpch_q14",
-    "tpch_q15",
-    "tpch_q17",
-    "tpch_q18",
-    "tpch_q19",
-    "tpch_q21",
-    "tpch_q22",
-    "tpch_q3",
-    "tpch_q4",
-    "tpch_q5",
-    "tpch_q6",
-    "tpch_q7",
-    "tpch_q8",
-    "tpch_q9",
-    "union_transactions",
-    "user_transaction_summary",
-    "user_transaction_summary_eur",
-    "word_freq_topk",
-)
-
-
-def _prioritize(merged):
-    ordered = {}
-    for name in _DRIVER_PRIORITY:
-        if name in merged:
-            ordered[name] = merged[name]
-    for name, value in merged.items():
-        if name not in ordered:
-            ordered[name] = value
-    return ordered
-
-
-#: rows-only BY DESIGN (VERDICT r9 ask #7): these registry queries have
-#: no ORACLE entry on purpose — their values are approximate sketches
-#: (HLL / approx-percentile) that no engine-portable SQL reproduces, so
-#: the driver records err="no_oracle" for them. That row is the EXPECTED
-#: outcome, not a failure: each query maps here to the exact `_check`
-#: twin that hash-locks the same pipeline against DuckDB. A scripted
-#: consumer of CORRECTNESS files should treat a no_oracle row for a key
-#: in this dict as by-design. tools/freshness.py fails the suite if this
-#: marker set drifts from the actual (queries − oracle) set or a twin
-#: loses its oracle slot.
+#: Registry queries with no ORACLE entry, by design: their values are
+#: approximate sketches (HLL / approx-percentile) that no engine-portable
+#: SQL reproduces, so a parity check can only compare their rows. Each
+#: maps to the exact `_check` twin that locks the same pipeline against
+#: DuckDB. tests/test_registry.py asserts that this set equals the
+#: registry's no-oracle set and that every twin has an oracle.
 BY_DESIGN_ROWS_ONLY = {
     "product_purchase_counts_approx": "product_purchase_counts_approx_check",
     "median_order_value_approx": "median_order_value_approx_check",
@@ -279,7 +59,7 @@ def all_queries():
         if overlap:
             raise ValueError(f"duplicate query names {overlap} in {mod_name}")
         out.update(mod.QUERIES)
-    return _prioritize(out)
+    return out
 
 
 def all_oracle():
@@ -287,4 +67,4 @@ def all_oracle():
     for mod_name in _MODULES:
         mod = import_module(f"{__name__}.{mod_name}")
         out.update(getattr(mod, "ORACLE", {}))
-    return _prioritize(out)
+    return out

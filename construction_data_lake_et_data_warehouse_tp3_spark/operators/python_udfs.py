@@ -1,16 +1,16 @@
 """Python-UDF surface (SURVEY §2.10: scalar pandas_udf, grouped-agg
-pandas UDF, applyInPandas, mapInPandas) — exposed as checked queries.
+pandas UDF, applyInPandas) — the shapes the reference pipeline's Beam
+`DoFn` maps to, exposed as checked queries.
 
 UDFs are the slow path by policy (everything else in this engine is
-JVM-side), so each demo here is the shape you reach for ONLY when
-built-ins can't express the logic. All are Arrow-batched (vectorized
-transfer); none is row-at-a-time Python.
+JVM-side and visible to Catalyst), so each demo here is the shape you
+reach for ONLY when built-ins can't express the logic. All are
+Arrow-batched (vectorized transfer); none is row-at-a-time Python.
 
 Oracle discipline: aggregating UDFs compute in 64-bit fixed point inside
 pandas (int64 `.sum()` is exact and order-free), so DuckDB reproduces the
 values exactly; the scalar UDF is a pure string map with an exact SQL
-twin. The mapInPandas feature extractor is rows-only (its byte-histogram
-kernel is the stubbed multimodal decode)."""
+twin."""
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -108,233 +108,13 @@ def apply_in_pandas_group_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events.groupBy("event_type").applyInPandas(stats, GROUP_STATS_SCHEMA)
 
 
-def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mapInPandas over binary media columns (stubbed decode — see
-    operators.multimodal): documents doubling as deterministic fake media
-    blobs (content = the 16 md5 bytes of the text).
-
-    Oracle-checked: the stub's byte-histogram feature is a pure function
-    of those md5 bytes, so DuckDB reproduces f0 exactly from the hex
-    digits — upgrading this from the rows-only check VERDICT r1 flagged.
-    Every value is a multiple of 1/16 (exact in binary), so the
-    cross-engine compare is bit-stable."""
-    from .multimodal import extract_features
-
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull()  # null text -> null blob: quarantined (oracle matches)
-    )
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("image").alias("kind"),
-        F.unhex(F.md5("text")).alias("content"),
-        F.lit("application/octet-stream").alias("mime"),
-        F.lit(4).alias("width"),
-        F.lit(4).alias("height"),
-        F.lit(0).alias("duration_ms"),
-    )
-    feats = extract_features(media)
-    return feats.select(
-        "media_id",
-        "n_bytes",
-        F.round(F.element_at("feature", 1).cast("double"), 4).alias("f0"),
-    )
-
-
-def ppm_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL codec-free media decode end to end: every document becomes a
-    genuine 4×4 binary PPM (P6) image assembled JVM-side (ASCII header +
-    48 raw md5-derived RGB bytes), and the mapInPandas kernel parses the
-    header and computes per-channel pixel means with numpy — actual
-    per-byte decode work, not a stub (VERDICT r2 §Missing #3).
-
-    Oracle-checked exactly: the pixel bytes are md5 digests of the text,
-    so DuckDB re-derives every byte from the hex digits and reproduces
-    the channel means bit-for-bit (sum of ≤16 ints / 16.0 is exact in
-    binary)."""
-    from .multimodal import ppm_channel_stats, synthetic_ppm_media
-
-    docs = load_table(spark, sf_dir, "documents")
-    media = synthetic_ppm_media(docs, "doc_id", "text")
-    stats = ppm_channel_stats(media)
-    return stats.select(
-        "media_id",
-        "width",
-        "height",
-        F.round("r_mean", 4).alias("r_mean"),
-        F.round("g_mean", 4).alias("g_mean"),
-        F.round("b_mean", 4).alias("b_mean"),
-    )
-
-
-def wav_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL codec-free AUDIO decode end to end — the waveform twin of
-    ppm_pixel_stats: every document becomes a genuine RIFF/WAVE PCM16-mono
-    clip assembled JVM-side (constant 44-byte header + 24 md5-derived
-    samples), and the mapInPandas kernel walks the RIFF chunks, validates
-    the fmt, and computes peak / mean-|s| / zero-crossings over the
-    little-endian int16 samples with numpy.
-
-    Oracle-checked exactly: each sample is b[2k] + 256·b[2k+1] sign-folded
-    at 32768, every byte re-derivable from the md5 hex digits, so DuckDB
-    reproduces peak/mean/crossings bit-for-bit (integer sums; the one
-    division /24.0 happens identically on both engines before round)."""
-    from .multimodal import synthetic_wav_media, wav_waveform_stats
-
-    docs = load_table(spark, sf_dir, "documents")
-    media = synthetic_wav_media(docs, "doc_id", "text")
-    stats = wav_waveform_stats(media)
-    return stats.select(
-        "media_id",
-        "n_samples",
-        "sample_rate",
-        "peak_abs",
-        F.round("mean_abs", 4).alias("mean_abs"),
-        "zero_crossings",
-    )
-
-
-def y4m_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL codec-free VIDEO decode end to end — completing the
-    image (ppm_pixel_stats) / audio (wav_audio_stats) / video triple:
-    every document becomes a genuine 2-frame 4×4 YUV4MPEG2 clip
-    assembled JVM-side (ASCII stream header + FRAME markers + raw
-    Y/U/V planes), and the mapInPandas kernel parses the header, walks
-    the frame markers, and computes per-frame luma means over the raw
-    Y planes with numpy.
-
-    Oracle-checked exactly: every Y byte re-derives from the md5 hex
-    digits; frame means are sums of 16 ints / 16.0 (exact powers of two)
-    and the 2-frame mean and range stay exact — no rounding call."""
-    from .multimodal import synthetic_y4m_media, y4m_frame_stats
-
-    docs = load_table(spark, sf_dir, "documents")
-    media = synthetic_y4m_media(docs, "doc_id", "text")
-    return y4m_frame_stats(media).select(
-        "media_id", "width", "height", "n_frames", "mean_luma", "luma_range"
-    )
-
-
-def arrow_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mapInArrow kernel: per-doc codepoint length and space count
-    computed with pyarrow.compute on the RAW Arrow RecordBatches —
-    the zero-copy tier BELOW mapInPandas (no pandas materialization,
-    no Series boxing; the batch never leaves Arrow memory). The shape
-    to reach for when a Python kernel is unavoidable but the work is
-    columnar: pc.utf8_length / pc.count_substring are C++ vectorized,
-    so the only Python cost is the per-batch loop.
-
-    Integer outputs ⇒ oracle-exact (DuckDB computes the same codepoint
-    length and replace-diff space count)."""
-
-    def kernel(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for batch in batches:
-            texts = batch.column("text")
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id"),
-                    pc.cast(pc.utf8_length(texts), pa.int64()),
-                    pc.cast(pc.count_substring(texts, " "), pa.int64()),
-                ],
-                ["doc_id", "n_chars", "n_spaces"],
-            )
-
-    docs = load_table(spark, sf_dir, "documents").where(
-        F.col("text").isNotNull()  # null text has no stats (oracle matches)
-    )
-    return docs.select("doc_id", "text").mapInArrow(
-        kernel, "doc_id long, n_chars long, n_spaces long"
-    )
-
-
-def y4m_keyframe_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame sampling over the synthetic clips: the mapInPandas kernel
-    EXPLODES each decoded clip into per-frame rows (frame_idx, ts_ms,
-    luma mean) — the 1→N Python-stage shape a vision-encoder feed needs
-    (y4m_video_stats is its 1→1 stats sibling). Stride 1 here keeps
-    both frames of the 2-frame clips so the oracle can replay every
-    emitted row; the kernel's every_n parameter is the real sampling
-    knob.
-
-    Oracle-exact: frame f's luma mean is (sum of 16 md5-derived bytes)
-    / 16.0 — a power-of-two division, no rounding call."""
-    from .multimodal import synthetic_y4m_media, y4m_frame_sample
-
-    docs = load_table(spark, sf_dir, "documents")
-    media = synthetic_y4m_media(docs, "doc_id", "text")
-    return y4m_frame_sample(media, every_n=1).select(
-        "media_id", "frame_idx", "ts_ms", "luma_mean"
-    )
-
-
-def ppm_resize_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image RESIZE in the Arrow kernel: each document's 4×4 PPM is
-    box-downsampled 2× — one output row per 2×2 block carrying the EXACT
-    integer channel sums and their means (sum of 4 bytes / 4.0 is a
-    dyadic rational, bit-identical across engines with no rounding
-    call).  The 1→4 row fan-out is the thumbnail/patch-grid shape a
-    vision encoder feed needs, the image twin of y4m_keyframe_sample's
-    frame explode; the oracle re-derives every block sum from the md5
-    hex digits."""
-    from .multimodal import ppm_box_downsample, synthetic_ppm_media
-
-    docs = load_table(spark, sf_dir, "documents")
-    media = synthetic_ppm_media(docs, "doc_id", "text")
-    return ppm_box_downsample(media)
-
-
 QUERIES = {
-    "ppm_resize_blocks": ppm_resize_blocks,
     "pandas_scalar_norm": pandas_scalar_norm,
-    "y4m_video_stats": y4m_video_stats,
-    "y4m_keyframe_sample": y4m_keyframe_sample,
-    "arrow_doc_stats": arrow_doc_stats,
     "pandas_udaf_value_stats": pandas_udaf_value_stats,
     "apply_in_pandas_group_stats": apply_in_pandas_group_stats,
-    "multimodal_features": multimodal_features,
-    "ppm_pixel_stats": ppm_pixel_stats,
-    "wav_audio_stats": wav_audio_stats,
 }
 
 ORACLE = {
-    "ppm_resize_blocks": """
-        WITH h AS (
-            SELECT doc_id AS media_id,
-                   md5(text) || md5(text || '1') || md5(text || '2') AS hx
-            FROM documents WHERE text IS NOT NULL
-        ),
-        b AS (
-            SELECT media_id, hx, CAST(unnest(range(0, 2)) AS INT) AS block_y
-            FROM h
-        ),
-        bb AS (
-            SELECT media_id, hx, block_y,
-                   CAST(unnest(range(0, 2)) AS INT) AS block_x
-            FROM b
-        ),
-        s AS (
-            SELECT media_id, block_y, block_x,
-                   CAST(list_sum(list_transform(range(0, 4), k ->
-                        ('0x' || substr(hx, (3 * ((block_y * 2 + k // 2) * 4
-                             + block_x * 2 + k % 2) + 0) * 2 + 1, 2))::BIGINT))
-                        AS BIGINT) AS r_sum,
-                   CAST(list_sum(list_transform(range(0, 4), k ->
-                        ('0x' || substr(hx, (3 * ((block_y * 2 + k // 2) * 4
-                             + block_x * 2 + k % 2) + 1) * 2 + 1, 2))::BIGINT))
-                        AS BIGINT) AS g_sum,
-                   CAST(list_sum(list_transform(range(0, 4), k ->
-                        ('0x' || substr(hx, (3 * ((block_y * 2 + k // 2) * 4
-                             + block_x * 2 + k % 2) + 2) * 2 + 1, 2))::BIGINT))
-                        AS BIGINT) AS b_sum
-            FROM bb
-        )
-        SELECT media_id, block_y, block_x, r_sum, g_sum, b_sum,
-               r_sum / 4.0 AS r_mean, g_sum / 4.0 AS g_mean,
-               b_sum / 4.0 AS b_mean
-        FROM s
-    """,
     "pandas_scalar_norm": """
         SELECT doc_id,
                lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS norm_text
@@ -355,122 +135,5 @@ ORACLE = {
                max(CAST(round(CASE WHEN isnan(value) THEN NULL ELSE value END * 100) AS BIGINT)) AS max_cents
         FROM events
         GROUP BY 1
-    """,
-    # f0 = fraction of the 16 md5(text) bytes with byte % 8 == 0; bytes
-    # re-derived from the hex digits, no blob handling needed
-    "multimodal_features": """
-        WITH h AS (SELECT doc_id AS media_id, md5(text) AS hx FROM documents WHERE text IS NOT NULL),
-        b AS (
-            SELECT media_id,
-                   list_transform(range(0, 16),
-                                  i -> ('0x' || substr(hx, 2 * i + 1, 2))::INT) AS bytes
-            FROM h
-        )
-        SELECT media_id,
-               16 AS n_bytes,
-               round(len(list_filter(bytes, x -> x % 8 = 0)) / 16.0, 4) AS f0
-        FROM b
-    """,
-    # pixel bytes = md5(text) ++ md5(text||'1') ++ md5(text||'2') (48
-    # bytes = 16 RGB pixels); channel c mean = avg of bytes 3j+c — every
-    # byte re-derived from the hex digests, same values the PPM kernel
-    # reads out of the binary payload
-    "ppm_pixel_stats": """
-        WITH h AS (
-            SELECT doc_id AS media_id,
-                   md5(text) || md5(text || '1') || md5(text || '2') AS hx
-            FROM documents WHERE text IS NOT NULL
-        )
-        SELECT media_id,
-               4 AS width,
-               4 AS height,
-               round(list_sum(list_transform(range(0, 16),
-                     j -> ('0x' || substr(hx, (3 * j + 0) * 2 + 1, 2))::BIGINT)) / 16.0, 4) AS r_mean,
-               round(list_sum(list_transform(range(0, 16),
-                     j -> ('0x' || substr(hx, (3 * j + 1) * 2 + 1, 2))::BIGINT)) / 16.0, 4) AS g_mean,
-               round(list_sum(list_transform(range(0, 16),
-                     j -> ('0x' || substr(hx, (3 * j + 2) * 2 + 1, 2))::BIGINT)) / 16.0, 4) AS b_mean
-        FROM h
-    """,
-    "arrow_doc_stats": """
-        SELECT doc_id,
-               CAST(length(text) AS BIGINT) AS n_chars,
-               CAST(length(text) - length(replace(text, ' ', '')) AS BIGINT)
-                   AS n_spaces
-        FROM documents WHERE text IS NOT NULL
-    """,
-    # the per-frame explode twin: one row per (doc, frame), luma mean
-    # re-derived from the same digest bytes the kernel reads
-    "y4m_keyframe_sample": """
-        WITH h AS (
-            SELECT doc_id AS media_id,
-                   md5(text) || md5(text || '1') || md5(text || '2') AS hx
-            FROM documents WHERE text IS NOT NULL
-        ),
-        f AS (
-            SELECT media_id, hx, CAST(unnest(range(0, 2)) AS INT) AS frame_idx
-            FROM h
-        )
-        SELECT media_id, frame_idx,
-               CAST(frame_idx * 40 AS BIGINT) AS ts_ms,
-               CAST(list_sum(list_transform(range(0, 16),
-                    i -> ('0x' || substr(hx, (frame_idx * 24 + i) * 2 + 1, 2))::BIGINT))
-                    AS BIGINT) / 16.0 AS luma_mean
-        FROM f
-    """,
-    # frame f's Y plane is digest bytes [f*24, f*24+16); frame mean =
-    # sum/16.0 (exact), 2-frame mean and range stay exact — the same
-    # values the y4m kernel reads out of the FRAME payloads
-    "y4m_video_stats": """
-        WITH h AS (
-            SELECT doc_id AS media_id,
-                   md5(text) || md5(text || '1') || md5(text || '2') AS hx
-            FROM documents WHERE text IS NOT NULL
-        ),
-        fl AS (
-            SELECT media_id,
-                   list_transform(range(0, 2), f ->
-                       CAST(list_sum(list_transform(range(0, 16),
-                            i -> ('0x' || substr(hx, (f * 24 + i) * 2 + 1, 2))::BIGINT))
-                            AS BIGINT) / 16.0) AS lumas
-            FROM h
-        )
-        SELECT media_id, 4 AS width, 4 AS height, 2 AS n_frames,
-               (lumas[1] + lumas[2]) / 2 AS mean_luma,
-               greatest(lumas[1], lumas[2]) - least(lumas[1], lumas[2])
-                   AS luma_range
-        FROM fl
-    """,
-    # PCM16-LE samples re-derived from the md5 hex digits: sample k is
-    # b[2k] + 256*b[2k+1], sign-folded at 32768 — the same ints the WAV
-    # kernel reads out of the RIFF data chunk
-    "wav_audio_stats": """
-        WITH h AS (
-            SELECT doc_id AS media_id,
-                   md5(text) || md5(text || '1') || md5(text || '2') AS hx
-            FROM documents WHERE text IS NOT NULL
-        ),
-        s AS (
-            SELECT media_id,
-                   list_transform(range(0, 24),
-                     k -> ('0x' || substr(hx, (2 * k) * 2 + 1, 2))::BIGINT
-                          + 256 * ('0x' || substr(hx, (2 * k + 1) * 2 + 1, 2))::BIGINT
-                   ) AS raw
-            FROM h
-        ),
-        sig AS (
-            SELECT media_id,
-                   list_transform(raw, r -> r - 65536 * CAST(r >= 32768 AS BIGINT)) AS sm
-            FROM s
-        )
-        SELECT media_id,
-               24 AS n_samples,
-               8000 AS sample_rate,
-               CAST(list_max(list_transform(sm, x -> abs(x))) AS BIGINT) AS peak_abs,
-               round(CAST(list_sum(list_transform(sm, x -> abs(x))) AS BIGINT)
-                     / 24.0, 4) AS mean_abs,
-               CAST(len(list_filter(range(1, 24),
-                    k -> (sm[k] < 0) != (sm[k + 1] < 0))) AS INT) AS zero_crossings
-        FROM sig
     """,
 }

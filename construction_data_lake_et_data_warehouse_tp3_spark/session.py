@@ -54,13 +54,14 @@ RUNTIME_CONF = {
     # Dimension tables (nation/region/payment-method dims) broadcast:
     # keeps the fact-side scan shuffle-free (SURVEY §2.3 #23-24).
     "spark.sql.autoBroadcastJoinThreshold": "64m",
-    # Arrow for any pandas-UDF path (similarity / multimodal operators).
+    # Arrow for the pandas UDFs (operators/python_udfs.py).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Deterministic timestamp comparison against the DuckDB oracle.
     "spark.sql.session.timeZone": "UTC",
-    # The driver testdata is written with nanosecond parquet timestamps,
-    # which Spark 4 refuses by default; read them as longs and convert in
-    # sources.registry (ns DIV 1000 ≙ DuckDB's ns→µs truncation).
+    # Spark 4 refuses nanosecond parquet timestamps by default (the
+    # shipped testdata is microsecond; outside input may not be); read
+    # them as longs and convert in sources.registry (ns DIV 1000 ≙
+    # DuckDB's ns→µs truncation).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 

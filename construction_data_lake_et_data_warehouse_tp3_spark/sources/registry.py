@@ -31,10 +31,12 @@ TABLES = (
 #: Small dimension tables that should always broadcast in joins.
 DIM_TABLES = frozenset({"region", "nation", "supplier"})
 
-#: Columns stored as TIMESTAMP(NANOS) in the driver parquet. Spark 4 reads
-#: them (under spark.sql.legacy.parquet.nanosAsLong) as int64 nanoseconds;
-#: we convert with integer DIV 1000 → timestamp_micros, which truncates
-#: exactly like DuckDB's native ns→µs read, keeping the oracle comparable.
+#: Timestamp columns that outside input may store as TIMESTAMP(NANOS)
+#: (the shipped testdata stores microseconds). Spark 4 reads a nanosecond
+#: column (under spark.sql.legacy.parquet.nanosAsLong) as int64
+#: nanoseconds; we convert with integer DIV 1000 → timestamp_micros, which
+#: truncates exactly like DuckDB's native ns→µs read, keeping the oracle
+#: comparable.
 TIMESTAMP_NS_COLS = {
     "orders": ("o_orderdate",),
     "lineitem": ("l_shipdate",),

@@ -86,15 +86,13 @@ class LateDimEnricher:
             fact_cols = [c for c in parked.columns if c not in _META_COLS and c != "updated_at"]
             meta = parked.select(self.fact_id, *_META_COLS)
             rehits, remisses = self._split(parked.select(*fact_cols), dim)
-            rehits_p = rehits.persist()
-            n_recovered = rehits_p.count()
-            if n_recovered:
-                merge_into(self.enriched, rehits_p, (self.fact_id,))
+            if not rehits.isEmpty():
+                merged = merge_into(self.enriched, rehits, (self.fact_id,))
+                n_recovered = merged["upserted"]
             survivors = remisses.join(meta, self.fact_id).withColumn(
                 "retry_count", F.col("retry_count") + 1
             )
             self.pending.overwrite(survivors)
-            rehits_p.unpersist()
 
         hits, misses = self._split(facts, dim)
         n_hits = merge_into(self.enriched, hits, (self.fact_id,))["upserted"]

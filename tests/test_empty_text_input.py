@@ -4,14 +4,11 @@ sources that do not follow the srcN naming convention, orders with
 negative or NULL prices, events with NULL user/type/value/timestamp,
 and embeddings that are NULL or wrong-length. Before the r7 guards this
 input crashed
-training_manifest (symbol_ratio divides by n_chars = 0 under ANSI),
-mixture_resample (CAST of a non-numeric source suffix), and all five
-real-decode media kernels (a NULL text seed builds a NULL blob, and the
-PPM/WAV/Y4M decoders raised instead of quarantining). Engine semantics,
+training_manifest (symbol_ratio divides by n_chars = 0 under ANSI) and
+mixture_resample (CAST of a non-numeric source suffix). Engine semantics,
 mirrored in the oracles: undefined quality ratios are NULL (failing the
-keep gate), non-srcN sources take the default mix weight via try_cast,
-and malformed/NULL blobs are SKIPPED by the decode kernels — a corrupt
-object in a 100 TB corpus must never fail the job. The applyInPandas
+keep gate) and non-srcN sources take the default mix weight via
+try_cast. The applyInPandas
 group-stats kernel keeps SQL aggregate NULL semantics (count(*) counts
 every row, sum/min/max ignore NULLs) instead of letting a NaN reach an
 int64 cast."""
@@ -100,19 +97,6 @@ def test_every_query_survives_empty_text(spark, empty_text_dir):
         f"{len(failures)} queries crash on empty/odd-source documents:\n"
         + "\n".join(sorted(failures))
     )
-
-
-def test_null_blob_is_quarantined_not_fatal(spark, empty_text_dir):
-    """The NULL-text doc builds a NULL blob; the decode kernels must
-    SKIP it (quarantine) while decoding every well-formed sibling."""
-    from construction_data_lake_et_data_warehouse_tp3_spark.operators.python_udfs import (
-        ppm_pixel_stats,
-        wav_audio_stats,
-    )
-
-    for q in (ppm_pixel_stats, wav_audio_stats):
-        ids = {r.media_id for r in q(spark, empty_text_dir).collect()}
-        assert ids and 90004 not in ids
 
 
 def test_kmv_distinct_check_null_user_parity(spark, empty_text_dir):

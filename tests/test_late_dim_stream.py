@@ -116,3 +116,32 @@ class TestLateDimEnricher:
         c = enr.process_batch(_facts(spark, []), dim2, 3)
         assert c["recovered"] == 1
         assert enr.backlog().count() == 0
+
+    def test_recovery_runs_no_count_job(self, spark, tmp_path):
+        """A batch that recovers a parked fact reports `recovered` from
+        the enriched MERGE's own write, so none of its jobs is a count()."""
+        import uuid
+
+        from construction_data_lake_et_data_warehouse_tp3_spark.streaming.late_dim_stream import (
+            LateDimEnricher,
+        )
+
+        enr = LateDimEnricher(spark, str(tmp_path))
+        enr.process_batch(_facts(spark, [(50, 2, 1.0)]), _dim(spark, [(1, "gold")]), 0)
+        dim2 = _dim(spark, [(1, "gold"), (2, "silver")])
+        sc = spark.sparkContext
+        group = f"test-late-dim-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            c = enr.process_batch(_facts(spark, []), dim2, 1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert c["recovered"] == 1
+        tracker = sc.statusTracker()
+        stages = [
+            tracker.getStageInfo(stage)
+            for job in tracker.getJobIdsForGroup(group)
+            for stage in tracker.getJobInfo(job).stageIds
+        ]
+        calls = {info.name.split(" at ")[0] for info in stages if info is not None}
+        assert calls and "count" not in calls, calls

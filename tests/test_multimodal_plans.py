@@ -1,13 +1,9 @@
-"""Multimodal plumbing (stubbed decode, real Spark dataflow) and
-physical-plan assertions (SURVEY §4 checklist: pushdown, pruning,
+"""Physical-plan assertions (SURVEY §4 checklist: pushdown, pruning,
 broadcast, codegen)."""
 
 from __future__ import annotations
 
-import pytest
-
 from construction_data_lake_et_data_warehouse_tp3_spark.operators import (
-    multimodal,
     tpch,
     joins,
 )
@@ -19,164 +15,6 @@ from construction_data_lake_et_data_warehouse_tp3_spark.plans import (
 )
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-class TestMultimodal:
-    def test_feature_extraction_shapes(self, spark):
-        media = multimodal.synthetic_media(spark, 30)
-        feats = multimodal.extract_features(media, batch_partitions=4).collect()
-        assert len(feats) == 30
-        assert all(len(r["feature"]) == 8 for r in feats)
-        assert all(abs(sum(r["feature"]) - 1.0) < 1e-6 for r in feats)
-        assert all(r["n_bytes"] == 16 for r in feats)  # md5 = 16 bytes
-
-    def test_strict_decode_raises(self):
-        with pytest.raises(NotImplementedError, match="PIL/ffmpeg"):
-            multimodal.decode_image_stub(b"\x00\x01", strict=True)
-
-    def test_decode_ppm_known_pixels(self):
-        """The PPM kernel must do real per-byte work: parse the ASCII
-        header, then average the raw RGB block."""
-        content = b"P6\n2 2\n255\n" + bytes(
-            [10, 20, 30, 40, 50, 60, 70, 80, 90, 100, 110, 120]
-        )
-        w, h, r, g, b = multimodal.decode_ppm(content)
-        assert (w, h) == (2, 2)
-        assert (r, g, b) == (55.0, 65.0, 75.0)
-
-    def test_decode_ppm_rejects_malformed(self):
-        with pytest.raises(ValueError, match="bad magic"):
-            multimodal.decode_ppm(b"JFIF....")
-        with pytest.raises(ValueError, match="truncated"):
-            multimodal.decode_ppm(b"P6\n4 4\n255\n\x00\x01")
-        with pytest.raises(ValueError, match="malformed"):
-            multimodal.decode_ppm(b"P6garbage")
-
-    def test_ppm_roundtrip_spark(self, spark):
-        """JVM-side PPM assembly → pandas kernel decode: dims survive and
-        channel means match a manual decode of the same md5 bytes."""
-        import hashlib
-
-        df = spark.createDataFrame([(7, "hello world")], "id long, seed string")
-        media = multimodal.synthetic_ppm_media(df, "id", "seed")
-        row = multimodal.ppm_channel_stats(media).collect()[0]
-        digest = b"".join(
-            hashlib.md5(f"hello world{sfx}".encode()).digest() for sfx in ("", "1", "2")
-        )
-        expected = [sum(digest[c::3]) / 16.0 for c in range(3)]
-        assert (row["width"], row["height"]) == (4, 4)
-        assert [row["r_mean"], row["g_mean"], row["b_mean"]] == expected
-
-    def test_decode_wav_known_samples(self):
-        """The WAV kernel must do real RIFF parsing: chunk walk (with an
-        unknown chunk interposed, like real encoders emit LIST/INFO), fmt
-        validation, and int16-LE waveform math."""
-        import struct
-
-        samples = [100, -200, 300, 0, -1]
-        data = b"".join(struct.pack("<h", s) for s in samples)
-        wav = (
-            b"RIFF" + struct.pack("<I", 4 + 8 + 7 + 1 + 8 + 16 + 8 + len(data)) + b"WAVE"
-            + b"junk" + struct.pack("<I", 7) + b"ignored" + b"\x00"  # odd size + pad
-            + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
-            + b"data" + struct.pack("<I", len(data)) + data
-        )
-        n, rate, peak, mean, crossings = multimodal.decode_wav(wav)
-        assert (n, rate, peak) == (5, 8000, 300)
-        assert mean == (100 + 200 + 300 + 0 + 1) / 5
-        # sign pattern +,-,+,+(0),- → 3 crossings
-        assert crossings == 3
-
-    def test_decode_wav_rejects_malformed(self):
-        import struct
-
-        with pytest.raises(ValueError, match="RIFF"):
-            multimodal.decode_wav(b"OggS....")
-        with pytest.raises(ValueError, match="missing fmt"):
-            multimodal.decode_wav(b"RIFF" + struct.pack("<I", 4) + b"WAVE")
-        stereo = (
-            b"RIFF" + struct.pack("<I", 40) + b"WAVE"
-            + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 2, 8000, 32000, 4, 16)
-            + b"data" + struct.pack("<I", 4) + b"\x00\x00\x00\x00"
-        )
-        with pytest.raises(ValueError, match="unsupported"):
-            multimodal.decode_wav(stereo)
-        # declared data size larger than the buffer: must raise, never
-        # compute stats over a partial payload
-        cut = (
-            b"RIFF" + struct.pack("<I", 40) + b"WAVE"
-            + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
-            + b"data" + struct.pack("<I", 100) + b"\x00\x00"
-        )
-        with pytest.raises(ValueError, match="truncated"):
-            multimodal.decode_wav(cut)
-
-    def test_wav_roundtrip_spark(self, spark):
-        """JVM-side WAV assembly → pandas kernel decode: the header the
-        Catalyst expression splices is a valid RIFF container and the
-        PCM block round-trips to the expected md5-derived samples."""
-        import hashlib
-        import struct
-
-        df = spark.createDataFrame([(7, "hello world")], "id long, seed string")
-        media = multimodal.synthetic_wav_media(df, "id", "seed")
-        row = multimodal.wav_waveform_stats(media).collect()[0]
-        digest = b"".join(
-            hashlib.md5(f"hello world{sfx}".encode()).digest() for sfx in ("", "1", "2")
-        )
-        expected = struct.unpack("<24h", digest)
-        assert row["n_samples"] == 24
-        assert row["sample_rate"] == 8000
-        assert row["peak_abs"] == max(abs(s) for s in expected)
-        assert row["mean_abs"] == sum(abs(s) for s in expected) / 24
-
-    def test_decode_y4m_known_frames(self):
-        """The y4m kernel must do real container parsing: stream header
-        params, FRAME markers, C420 plane sizes, per-frame luma means."""
-        y0 = bytes(range(16))          # mean 7.5
-        y1 = bytes([100] * 16)         # mean 100.0
-        chroma = bytes(8)
-        clip = (
-            b"YUV4MPEG2 W4 H4 F25:1 Ip A1:1 C420\n"
-            + b"FRAME\n" + y0 + chroma
-            + b"FRAME\n" + y1 + chroma
-        )
-        w, h, n, mean, rng = multimodal.decode_y4m(clip)
-        assert (w, h, n) == (4, 4, 2)
-        assert mean == (7.5 + 100.0) / 2
-        assert rng == 100.0 - 7.5
-
-    def test_decode_y4m_rejects_malformed(self):
-        with pytest.raises(ValueError, match="YUV4MPEG2"):
-            multimodal.decode_y4m(b"RIFF....")
-        with pytest.raises(ValueError, match="W/H"):
-            multimodal.decode_y4m(b"YUV4MPEG2 F25:1\nFRAME\n")
-        with pytest.raises(ValueError, match="unsupported chroma"):
-            multimodal.decode_y4m(b"YUV4MPEG2 W4 H4 C444\nFRAME\n" + bytes(48))
-        with pytest.raises(ValueError, match="truncated"):
-            multimodal.decode_y4m(b"YUV4MPEG2 W4 H4 C420\nFRAME\n" + bytes(5))
-
-    def test_y4m_roundtrip_spark(self, spark):
-        import hashlib
-
-        df = spark.createDataFrame([(7, "hello world")], "id long, seed string")
-        media = multimodal.synthetic_y4m_media(df, "id", "seed")
-        row = multimodal.y4m_frame_stats(media).collect()[0]
-        digest = b"".join(
-            hashlib.md5(f"hello world{sfx}".encode()).digest() for sfx in ("", "1", "2")
-        )
-        lumas = [sum(digest[f * 24 : f * 24 + 16]) / 16.0 for f in range(2)]
-        assert (row["width"], row["height"], row["n_frames"]) == (4, 4, 2)
-        assert row["mean_luma"] == sum(lumas) / 2
-        assert row["luma_range"] == max(lumas) - min(lumas)
-
-    def test_frame_sample_plan_fanout(self, spark):
-        media = multimodal.synthetic_media(spark, 9)  # 3 videos
-        frames = multimodal.frame_sample_plan(media, every_ms=250)
-        rows = frames.collect()
-        n_videos = media.where("kind = 'video'").count()
-        assert len(rows) == n_videos * 5  # 0..1000 step 250 → 5 frames
-        assert {"media_id", "frame_ms"} <= set(frames.columns)
 
 
 class TestPlans:

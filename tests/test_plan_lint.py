@@ -5,8 +5,8 @@ and scanned for the two anti-patterns that silently kill 100 TB runs —
   (the brute-force baselines in similarity.py broadcast a K-row side on
   purpose; a plain CartesianProduct is always a regression);
 - BatchEvalPython: a row-at-a-time Python UDF in the plan (the only
-  sanctioned Python is Arrow-batched — ArrowEvalPython / mapInPandas /
-  mapInArrow).
+  sanctioned Python is Arrow-batched — ArrowEvalPython /
+  AggregateInPandas / FlatMapGroupsInPandas).
 
 Per-operator plan locks pin specific shapes; this net catches the
 query NOBODY remembered to lock.  The registry is linted in two

@@ -1,12 +1,11 @@
 """Plan locks for the r5 operators: the shapes that make them viable at
 100 TB must not silently regress (same discipline as the q3/q5/minhash
-locks in test_multimodal_plans.py)."""
+locks in TestPlans)."""
 
 from __future__ import annotations
 
 from construction_data_lake_et_data_warehouse_tp3_spark.operators import (
     analytics,
-    python_udfs,
     statistics,
     temporal,
     text,
@@ -20,15 +19,6 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 class TestR5Plans:
-    def test_media_decodes_single_python_stage(self, spark):
-        """Each real-decode operator runs exactly ONE Arrow-batched Python
-        stage (mapInPandas) — a second would mean blobs cross an exchange
-        or re-enter Python."""
-        for fn in (python_udfs.wav_audio_stats, python_udfs.y4m_video_stats):
-            plan = fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
-            assert plan.count("MapInPandas") == 1, fn.__name__
-            assert "hashpartitioning" not in plan, fn.__name__
-
     def test_interpolation_windows_over_aggregated_frame(self, spark):
         """The lead() window must run over the ~|days| aggregated rows:
         exactly one pre-window hash aggregate over orders, and ≤2
@@ -173,26 +163,6 @@ class TestR5cPlans:
         assert plan.count("HashAggregate") >= 2
 
 
-class TestR5cSamplers:
-    def test_frame_sample_stride_halves_rows(self, spark):
-        """every_n=2 keeps frame 0 only of the 2-frame clips — the
-        sampling knob is real, not cosmetic."""
-        from construction_data_lake_et_data_warehouse_tp3_spark.operators.multimodal import (
-            synthetic_y4m_media,
-            y4m_frame_sample,
-        )
-        from construction_data_lake_et_data_warehouse_tp3_spark.sources.registry import (
-            load_table,
-        )
-
-        docs = load_table(spark, SF_DIR, "documents").limit(20)
-        media = synthetic_y4m_media(docs, "doc_id", "text")
-        all_frames = y4m_frame_sample(media, every_n=1).collect()
-        sampled = y4m_frame_sample(media, every_n=2).collect()
-        assert len(all_frames) == 40 and len(sampled) == 20
-        assert {r.frame_idx for r in sampled} == {0}
-
-
 class TestSkylinePlans:
     def test_skyline_is_windows_only_no_join(self, spark):
         """Both dominance phases are window tests — the naive skyline is
@@ -213,14 +183,6 @@ class TestSkylinePlans:
                     and (q.revenue_cents > p.revenue_cents or q.n_orders < p.n_orders)
                 )
                 assert not dominated
-
-
-class TestArrowKernel:
-    def test_arrow_stats_single_arrow_stage_no_shuffle(self, spark):
-        df = python_udfs.arrow_doc_stats(spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("MapInArrow") == 1
-        assert "hashpartitioning" not in plan
 
 
 class TestR6LmSurprisalPlan:

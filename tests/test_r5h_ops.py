@@ -149,60 +149,6 @@ class TestSeasonalNaiveBacktest:
         assert all(r.mae_cents == 50 for r in got.values())
 
 
-class TestPpmResizeBlocks:
-    def test_hand_built_ppm_blocks_exact(self, spark):
-        """A hand-assembled 4x4 P6 with known bytes: block sums/means
-        must match the by-hand box filter."""
-        from construction_data_lake_et_data_warehouse_tp3_spark.operators.multimodal import (
-            ppm_box_downsample,
-        )
-
-        # pixel (y, x) has R=16*y+x, G=100+y, B=200+x  (all < 256)
-        pix = bytes(
-            b
-            for y in range(4)
-            for x in range(4)
-            for b in (16 * y + x, 100 + y, 200 + x)
-        )
-        content = b"P6\n4 4\n255\n" + pix
-        media = spark.createDataFrame(
-            [(7, content)], "media_id long, content binary"
-        )
-        got = {(r.block_y, r.block_x): r for r in ppm_box_downsample(media).collect()}
-        assert len(got) == 4
-        r00 = got[(0, 0)]
-        # R over pixels (0,0),(0,1),(1,0),(1,1): 0+1+16+17 = 34
-        assert r00.r_sum == 34 and r00.r_mean == 34 / 4.0
-        # G: 100+100+101+101
-        assert r00.g_sum == 402
-        # B: 200+201+200+201
-        assert r00.b_sum == 802
-        r11 = got[(1, 1)]
-        # R over (2,2),(2,3),(3,2),(3,3): 34+35+50+51 = 170
-        assert r11.r_sum == 170 and r11.r_mean == 42.5
-
-    def test_blocks_reaggregate_to_channel_means(self, spark):
-        """Σ block sums / 16 must equal ppm_pixel_stats' channel mean —
-        the resize is a lossless partition of the pixel mass."""
-        from construction_data_lake_et_data_warehouse_tp3_spark.operators.python_udfs import (
-            ppm_pixel_stats,
-            ppm_resize_blocks,
-        )
-
-        sf = "/root/testdata/sf0.001"
-        blocks = {}
-        for r in ppm_resize_blocks(spark, sf).collect():
-            acc = blocks.setdefault(r.media_id, [0, 0, 0])
-            acc[0] += r.r_sum
-            acc[1] += r.g_sum
-            acc[2] += r.b_sum
-        for s in ppm_pixel_stats(spark, sf).collect():
-            rs, gs, bs = blocks[s.media_id]
-            assert round(rs / 16.0, 4) == s.r_mean
-            assert round(gs / 16.0, 4) == s.g_mean
-            assert round(bs / 16.0, 4) == s.b_mean
-
-
 class TestAbTestZscore:
     def test_planted_arms_counts_and_z(self, spark, tmp_path):
         """Synthetic users with known md5 arms: counts, rates and the

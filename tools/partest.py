@@ -57,7 +57,6 @@ COSTS = {
     "test_dedup_stream.py": 23,
     "test_r5e_ops.py": 16,
     "test_scd2_stream.py": 14,
-    "test_multimodal_plans.py": 12,
     "test_cli.py": 100,
     "test_oracle_types.py": 11,
     "test_graph.py": 12,
